@@ -84,7 +84,8 @@ def build(root: Path, out: Path) -> Path:
         SCALAC_FLAGS + ["-classpath", f"{jars}/*", "-d", str(classes)] + [str(f) for f in files]))
     print(f"[perfbench] compiling {len(files)} Scala files", file=sys.stderr, flush=True)
     proc = subprocess.run(
-        [java(), "-Xss8m", "-Xmx2g", "-cp", ":".join(compiler), "scala.tools.nsc.Main", f"@{argfile}"],
+        [java(), "-XX:-UsePerfData", "-Xss8m", "-Xmx2g", "-cp", ":".join(compiler),
+         "scala.tools.nsc.Main", f"@{argfile}"],
         stdout=sys.stderr, stderr=sys.stderr, timeout=800)
     if proc.returncode != 0:
         shutil.rmtree(classes, ignore_errors=True)
@@ -97,7 +98,9 @@ def jvm_command(classes: Path, work: Path, main: str, heap: str = "3g") -> list:
     """`java …` for a benchmark main on the built classes, with scratch
     (JVM temp, Spark warehouse) kept under `work`."""
     opens = [a for p in ADD_OPENS for a in ("--add-opens", f"{p}=ALL-UNNAMED")]
-    return [java(), f"-Xmx{heap}", "-XX:+UseG1GC", *opens,
+    # -UsePerfData: HotSpot would otherwise write its perf-data file to
+    # the system temp directory, outside the checkout
+    return [java(), f"-Xmx{heap}", "-XX:+UseG1GC", "-XX:-UsePerfData", *opens,
             f"-Djava.io.tmpdir={work / 'tmp'}",
             f"-Dspark.sql.warehouse.dir={work / 'warehouse'}",
             "-Dspark.ui.enabled=false",
