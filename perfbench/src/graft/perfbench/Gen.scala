@@ -35,9 +35,10 @@ object Gen {
     z ^ (z >>> 31)
   }
 
-  /** Heavy-tailed per-symbol bar counts: a Zipf(`skew`) law over
-    * randomly permuted symbol ids, so the largest symbol lands on a
-    * seed-dependent partition. Counts sum exactly to `bars`.
+  /** Per-symbol bar counts: a Zipf(`skew`) law over randomly permuted
+    * symbol ids, so with `skew` > 0 the counts are heavy-tailed and the
+    * largest symbol lands on a seed-dependent partition; `skew` 0 gives
+    * every symbol the same depth. Counts sum exactly to `bars`.
     */
   def symbolSpecs(seed: Long, symbols: Int, bars: Long, skew: Double): IndexedSeq[SymbolSpec] = {
     val w = (1 to symbols).map(r => math.pow(r.toDouble, -skew))
@@ -127,6 +128,14 @@ object Gen {
       (links.minOption.getOrElse(1.0), skips.maxOption.getOrElse(0.0))
     }
 
+    /** Share of documents that are exact copies under graft's
+      * fingerprint normalization (lowercase, whitespace runs collapsed,
+      * trimmed): 1 − distinct fingerprints / documents.
+      */
+    def exactCopyShare: Double =
+      1.0 - docs.map(d => d.text.toLowerCase(java.util.Locale.ROOT).replaceAll("\\s+", " ").trim)
+        .distinct.size.toDouble / docs.size
+
     def describe: String = {
       val chains = families.filterNot(_.exact)
       val exact = families.filter(_.exact)
@@ -134,6 +143,7 @@ object Gen {
         .map { case (k, v) => s"$k:${v.size}" }.mkString(",")
       s"documents=${docs.size} exact_dup_sets=${exact.size} chain_families=${chains.size} " +
         s"family_sizes={$sizes} max_chain_depth=${chains.map(_.ids.size - 1).maxOption.getOrElse(0)} " +
+        f"exact_copy_share=$exactCopyShare%.4f " +
         s"pii_docs=${docs.count(_.text.contains("@ex"))} " +
         s"structured_docs=${docs.count(_.text.contains("\n- "))}"
     }
@@ -190,10 +200,12 @@ object Gen {
       out
     }
     // a fixed family plan, so every seed runs the same amount of dedup
-    // work: n/100 chains of each size 2..5, and n/50 exact-duplicate
-    // triples — 4 % copies, clear of ngramJaccardPairs' 10 % switch to
-    // its canonical-representative plan (whose copy estimate is
-    // approximate, so a share near 10 % would pick the plan by seed)
+    // work: n/100 chains of each size 2..5, and n/200 exact-duplicate
+    // triples — 1 % copies. graft's own documents test data holds 0.16 %
+    // (sf0.1) and 0 % (sf0.01) copies, below ngramJaccardPairs' 10 %
+    // switch to its canonical-representative plan, so the corpus stays
+    // on that side and well clear of the switch (the plan's copy
+    // estimate is approximate: near 10 % it would pick the plan by seed)
     val docs = Array.ofDim[String](n)
     val families = IndexedSeq.newBuilder[Family]
     var i = 0
@@ -210,7 +222,7 @@ object Gen {
       }
       families += Family(ids, exact = false); i += size
     }
-    for (_ <- 0 until n / 50) {
+    for (_ <- 0 until n / 200) {
       // later copies sometimes re-cased, which the fingerprint normalizes
       val text = soup(60 + rnd.nextInt(60)).mkString(" ")
       val ids = (0 until 3).map { k =>

@@ -14,16 +14,20 @@ import org.apache.spark.sql.SparkSession
   *        --work <dir> [--digests <file>]
   *
   * Set-up is session build plus input generation, run [[SetupRounds]]
-  * times (median reported), plus the workload's checked warm-up passes.
-  * Passes then run
-  * in a closed loop for `--seconds`. With `--trace 0` the last stdout
-  * line carries the end-to-end metrics; with `--trace 1` the first half
-  * of the time runs untraced and the second half traced, and the line
-  * carries the per-layer metrics. Any failed check or thrown call makes
+  * times (median reported), plus [[WarmupPasses]] checked warm-up
+  * passes. Passes then run in a closed loop for `--seconds`. With `--trace 0` the last stdout
+  * line carries the end-to-end metrics; with `--trace 1` untraced and
+  * traced passes run in pairs for `--seconds`, and the line carries the
+  * per-layer metrics. Any failed check or thrown call makes
   * `correct` false and the exit code 1.
   */
 object Main {
   val SetupRounds = 3
+  /** Untimed passes before measuring. The first pass in a JVM pays code
+    * generation and compilation, and the second still runs 20–40 %
+    * slower than the flatter ones after it, on both workloads.
+    */
+  val WarmupPasses = 2
 
   final case class Opts(
       workload: String, seed: Long, seconds: Double, trace: Boolean, work: String,
@@ -126,7 +130,7 @@ object Main {
       (System.nanoTime() - t0) / 1e9
     }
     val plain = new Tracer(spark, enabled = false)
-    val warmS = (1 to wl.warmupPasses).map(_ => doPass(spark, plain).wallMs / 1000.0)
+    val warmS = (1 to WarmupPasses).map(_ => doPass(spark, plain).wallMs / 1000.0)
     val setupS = Stats.median(rounds) + warmS.sum
     say(f"set-up rounds (session build + inputs): ${rounds.map(r => f"$r%.2f").mkString(" ")} s " +
       f"(session build ${buildMs.map(b => f"${b / 1000}%.2f").mkString(" ")} s); " +
@@ -169,22 +173,40 @@ object Main {
           "wall_s" -> (wallS, "s"),
           "rows_per_s" -> (wl.rowsPerPass / wallS, "1/s"))
       } else {
-        val untraced = loop(plain, o.seconds / 2)
-        val counters = SparkCounters.attach(spark)
+        // untraced and traced passes in adjacent pairs whose order
+        // alternates (U T, T U, U T, …), so warm-up and host drift fall
+        // on both sides of the overhead ratio; the listener is attached
+        // for the traced passes only
+        val counters = new SparkCounters
         val tr = new Tracer(spark, enabled = true)
-        val traced = loop(tr, o.seconds / 2)
-        SparkCounters.drain(spark)
-        SparkCounters.detach(spark, counters)
-        val layers = new Layers(tr.spans.toSeq, counters, wl.rowsPerPass, traced.map(_.out.facts))
+        def traced(pair: Int): PassRun = {
+          tr.run = s"${wl.name}/${o.seed}/$pair"
+          spark.sparkContext.addSparkListener(counters)
+          try doPass(spark, tr)
+          finally {
+            SparkCounters.drain(spark)
+            spark.sparkContext.removeSparkListener(counters)
+          }
+        }
+        val pairs = mutable.ArrayBuffer.empty[(PassRun, PassRun)] // (untraced, traced)
+        val t0 = System.nanoTime()
+        while (pairs.isEmpty || (System.nanoTime() - t0) / 1e9 < o.seconds) {
+          val k = pairs.size
+          pairs += (if (k % 2 == 0) { val u = doPass(spark, plain); (u, traced(k)) }
+                    else { val t = traced(k); (doPass(spark, plain), t) })
+        }
+        say(s"pass walls ms (untraced/traced): " +
+          pairs.map { case (u, t) => f"${u.wallMs}%.0f/${t.wallMs}%.0f" }.mkString(" "))
+        val layers = new Layers(tr.spans.toSeq, counters, wl.rowsPerPass, pairs.map(_._2.out.facts).toSeq)
         layers.writeJsonl(new File(o.work, s"trace-${wl.name}-${o.seed}.jsonl"))
         if (counters.unattributedQueries > 0)
           say(s"${counters.unattributedQueries} query executions had no span")
-        val overhead = Stats.median(traced.map(_.wallMs)) / Stats.median(untraced.map(_.wallMs))
+        val overhead = Stats.median(pairs.map { case (u, t) => t.wallMs / u.wallMs }.toSeq)
         layers.metrics ++ ListMap(
           "sessions.build_ms" -> (Stats.median(buildMs.toSeq), "ms"),
           "tradebook.ns_per_bar" -> (wl.tradeBookNsPerBar(), "ns"),
           "trace.overhead_ratio" -> (overhead, "ratio"),
-          "trace.passes" -> (traced.size.toDouble, "count"))
+          "trace.passes" -> (pairs.size.toDouble, "count"))
       }
     val calAfter = Host.calibrateMs()
     spark.stop()

@@ -174,15 +174,6 @@ final class SparkCounters extends SparkListener {
 }
 
 object SparkCounters {
-  def attach(spark: SparkSession): SparkCounters = {
-    val c = new SparkCounters
-    spark.sparkContext.addSparkListener(c)
-    c
-  }
-
-  def detach(spark: SparkSession, c: SparkCounters): Unit =
-    spark.sparkContext.removeSparkListener(c)
-
   /** Block until the listener bus has delivered every posted event. */
   def drain(spark: SparkSession): Unit = {
     val sc = spark.sparkContext

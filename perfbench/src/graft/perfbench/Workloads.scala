@@ -32,19 +32,21 @@ trait Workload {
   /** Writes the inputs (part of set-up). */
   def generate(spark: SparkSession): Unit
   def pass(spark: SparkSession, tr: Tracer): PassOut
-  /** Untimed passes before measuring. The first pass in a JVM pays code
-    * generation and compilation, and a second corpus pass still runs
-    * 20–40 % slower than the flat ones after it.
-    */
-  def warmupPasses: Int = 2
   /** Single-thread `TradeBook.step` cost over the workload's bars. */
   def tradeBookNsPerBar(): Double = 0.0
 }
 
 object Workload {
   def apply(name: String, seed: Long, dir: String): Workload = name match {
-    case "mtm_bulk" => new MtmBulk(seed, dir)
-    case "mtm_sweep" => new MtmSweep(seed, dir)
+    case "mtm_bulk" => new MtmWorkload(name, seed, dir, symbols = 5000, bars = 4000000L,
+      skew = 0.75, files = 8, configs = IndexedSeq(Mtm.bulkConfig), adapter = false)
+    // sf0.1's events shape: 1.5k symbols of near-equal depth. Its 100k
+    // bars put the engine's exchange at two partitions after AQE
+    // coalescing; the generated bars compress better and need about
+    // 110k to do the same (and stay there up to at least 190k), so 150k
+    // keeps every seed on sf0.1's side of that switch.
+    case "mtm_sweep" => new MtmWorkload(name, seed, dir, symbols = 1500, bars = 150000L,
+      skew = 0.0, files = 1, configs = Mtm.sweepConfigs(seed, 8), adapter = true)
     case "corpus_dedup" => new CorpusDedup(seed, dir)
     case other => throw new IllegalArgumentException(s"unknown workload $other")
   }
@@ -145,72 +147,29 @@ object Mtm {
   def hashAll(cols: Seq[String]) = sum(xxhash64(cols.map(col): _*).cast("decimal(38,0)"))
 }
 
-final class MtmBulk(seed: Long, dir: String) extends Workload {
-  val name = "mtm_bulk"
-  private val specs = Gen.symbolSpecs(seed, symbols = 5000, bars = 4000000L, skew = 0.75)
-  private val files = 8
-  val rowsPerPass: Long = specs.map(_.count.toLong).sum
-  private var replay: Replay = _
-  private var expect: Map[Long, Expect] = Map.empty
-  private val counts = specs.map(s => s.symbol -> s.count.toLong).toMap
-
-  def describe: String = s"files=$files ${Gen.eventsShape(seed, specs).describe}"
-
-  def reference(): Unit = {
-    replay = new Replay(seed, specs)
-    expect = replay.run(Mtm.bulkConfig)
-  }
-
-  override def tradeBookNsPerBar(): Double = replay.nsPerBar(Mtm.bulkConfig)
-
-  def generate(spark: SparkSession): Unit = Gen.writeEvents(spark, dir, seed, specs, files)
-
-  def pass(spark: SparkSession, tr: Tracer): PassOut = {
-    val t0 = System.nanoTime()
-    val bars = Mtm.bars(spark, dir, tr)
-    val res = tr.span("mtm_runner.calculate")(MtmRunner.calculate(bars, Mtm.bulkConfig))
-    val summary = tr.span("mtm_runner.summary")(res.summary.collect())
-    val trades = tr.span("mtm_runner.trades")(res.trades.groupBy("symbol").agg(
-      count(lit(1)), count(when(col("is_closed"), 1)), Mtm.hashAll(res.trades.columns.toSeq))
-      .collect())
-    val timeline = tr.span("mtm_runner.timeline")(res.timeline.groupBy("symbol").agg(
-      count(lit(1)), sum(floor(col("mtm_ratio") * lit(1e9) + lit(0.5))),
-      Mtm.hashAll(res.timeline.columns.toSeq)).collect())
-    val ms = (System.nanoTime() - t0) / 1e6
-
-    val f = mutable.ArrayBuffer.empty[String]
-    f ++= Mtm.checkSummary(name, summary, expect, u => u / 1e9)
-    val tlUnits = timeline.map(r => r.getLong(0) -> r.getLong(2)).toMap
-    if (timeline.map(_.getLong(1)).sum != rowsPerPass ||
-        timeline.exists(r => counts.get(r.getLong(0)).forall(_ != r.getLong(1))))
-      f += "timeline rows != input bars for some symbol"
-    val unitsBad = summary.count { r =>
-      tlUnits.get(r.getAs[Long]("symbol")).forall(u => u / 1e9 != r.getAs[Double]("pnl"))
-    }
-    if (unitsBad > 0) f += s"$unitsBad symbols: summary pnl != Σ timeline mtm in 1e-9 units"
-    val tradesBad = trades.count { r =>
-      expect.get(r.getLong(0)).forall(e => r.getLong(1) != e.closed + e.open || r.getLong(2) != e.closed)
-    }
-    if (tradesBad > 0 || trades.length != expect.count(e => e._2.closed + e._2.open > 0))
-      f += s"trade blotter disagrees with the sequential replay on $tradesBad symbols"
-    val d = Digest.of(summary.map(_.toSeq))
-    val dt = trades.map(r => Digest.fromSum(r.getLong(1), r.getDecimal(3))).foldLeft(Digest.empty)(_ + _)
-    val dl = timeline.map(r => Digest.fromSum(r.getLong(1), r.getDecimal(3))).foldLeft(Digest.empty)(_ + _)
-    PassOut(s"summary=$d trades=$dt timeline=$dl", f.toSeq, Seq(ms), if (f.isEmpty) 0 else 1)
-  }
-}
-
-final class MtmSweep(seed: Long, dir: String) extends Workload {
-  val name = "mtm_sweep"
-  private val specs = Gen.symbolSpecs(seed, symbols = 1500, bars = 100000L, skew = 0.75)
-  private val configs = Mtm.sweepConfigs(seed, 8)
-  private val bars = specs.map(_.count.toLong).sum
+/** An MTM workload: `configs` trials in order over one generated events
+  * table of `symbols` symbols and `bars` bars (depth Zipf(`skew`)) in
+  * `files` parquet files.
+  * Each trial builds its frames from the input path and collects the
+  * summary (through the hyper-opt adapter when `adapter`); the first
+  * trial of a pass also materializes the blotter and the timeline, so
+  * every pass checks and digests all three outputs.
+  */
+final class MtmWorkload(
+    val name: String, seed: Long, dir: String, symbols: Int, bars: Long, skew: Double,
+    files: Int, configs: IndexedSeq[PnlConfig], adapter: Boolean)
+    extends Workload {
+  private val specs = Gen.symbolSpecs(seed, symbols, bars, skew)
   val rowsPerPass: Long = bars * configs.length
+  private val counts = specs.map(s => s.symbol -> s.count.toLong).toMap
   private var replay: Replay = _
   private var expect: IndexedSeq[Map[Long, Expect]] = IndexedSeq.empty
 
+  private def pnlOf(units: Long): Double =
+    if (adapter) Mtm.adapted(units / 1e9) else units / 1e9
+
   def describe: String =
-    s"files=1 configs=${configs.length} ${Gen.eventsShape(seed, specs).describe}"
+    s"files=$files configs=${configs.length} ${Gen.eventsShape(seed, specs).describe}"
 
   def reference(): Unit = {
     replay = new Replay(seed, specs)
@@ -219,33 +178,63 @@ final class MtmSweep(seed: Long, dir: String) extends Workload {
 
   override def tradeBookNsPerBar(): Double = replay.nsPerBar(configs.head)
 
-  /** Eight trials warm the JIT compiler as far as two corpus passes. */
-  override def warmupPasses: Int = 1
+  def generate(spark: SparkSession): Unit = Gen.writeEvents(spark, dir, seed, specs, files)
 
-  def generate(spark: SparkSession): Unit = Gen.writeEvents(spark, dir, seed, specs, 1)
-
-  /** One sweep: every configuration once, in order, each a trial that
-    * builds its frames from the input path and collects the adapted
-    * summary.
-    */
   def pass(spark: SparkSession, tr: Tracer): PassOut = {
     val f = mutable.ArrayBuffer.empty[String]
     var d = Digest.empty
+    var blotterAndTimeline = ""
     var failedTrials = 0
     val ms = configs.indices.map { i =>
       val t0 = System.nanoTime()
       val b = Mtm.bars(spark, dir, tr)
       val res = tr.span("mtm_runner.calculate")(MtmRunner.calculate(b, configs(i)))
-      val rows = tr.span("mtm_runner.summary")(MtmRunner.hyperOptAdapter(res.summary).collect())
+      val summary = if (adapter) MtmRunner.hyperOptAdapter(res.summary) else res.summary
+      val rows = tr.span("mtm_runner.summary")(summary.collect())
+      val (full, fullBad) = if (i == 0) materialize(res, rows, expect(i), tr) else ("", Nil)
       val dt = (System.nanoTime() - t0) / 1e6
-      val bad = Mtm.checkSummary(s"$name trial $i", rows, expect(i), u => Mtm.adapted(u / 1e9))
+      val bad = Mtm.checkSummary(s"$name trial $i", rows, expect(i), pnlOf) ++ fullBad
       if (bad.nonEmpty) failedTrials += 1
       f ++= bad
       d = d + Digest.of(rows.map(_.toSeq))
+      if (i == 0) blotterAndTimeline = full
       graft.Sessions.dropAllCaches(spark)
       dt
     }
-    PassOut(s"summaries=$d", f.toSeq, ms, failedTrials)
+    PassOut(s"summaries=$d $blotterAndTimeline", f.toSeq, ms, failedTrials)
+  }
+
+  /** Materializes a trial's blotter and timeline as per-symbol
+    * aggregates and checks them: one timeline row per input bar, Σ
+    * timeline mtm equal to the summary pnl in exact 1e-9 units, and
+    * closed and open trade counts equal to the sequential replay.
+    * Returns their digests and the failed checks.
+    */
+  private def materialize(res: MtmRunner.MtmResult, summary: Array[Row],
+      expect: Map[Long, Expect], tr: Tracer): (String, Seq[String]) = {
+    val trades = tr.span("mtm_runner.trades")(res.trades.groupBy("symbol").agg(
+      count(lit(1)), count(when(col("is_closed"), 1)), Mtm.hashAll(res.trades.columns.toSeq))
+      .collect())
+    val timeline = tr.span("mtm_runner.timeline")(res.timeline.groupBy("symbol").agg(
+      count(lit(1)), sum(floor(col("mtm_ratio") * lit(1e9) + lit(0.5))),
+      Mtm.hashAll(res.timeline.columns.toSeq)).collect())
+    val f = mutable.ArrayBuffer.empty[String]
+    if (timeline.map(_.getLong(1)).sum != bars ||
+        timeline.exists(r => counts.get(r.getLong(0)).forall(_ != r.getLong(1))))
+      f += s"$name: timeline rows != input bars for some symbol"
+    val tlUnits = timeline.map(r => r.getLong(0) -> r.getLong(2)).toMap
+    val unitsBad = summary.count { r =>
+      tlUnits.get(r.getAs[Long]("symbol")).forall(u => pnlOf(u) != r.getAs[Double]("pnl"))
+    }
+    if (unitsBad > 0) f += s"$name: $unitsBad symbols: summary pnl != Σ timeline mtm in 1e-9 units"
+    val tradesBad = trades.count { r =>
+      expect.get(r.getLong(0)).forall(e => r.getLong(1) != e.closed + e.open || r.getLong(2) != e.closed)
+    }
+    if (tradesBad > 0 || trades.length != expect.count(e => e._2.closed + e._2.open > 0))
+      f += s"$name: trade blotter disagrees with the sequential replay on $tradesBad symbols"
+    val dt = trades.map(r => Digest.fromSum(r.getLong(1), r.getDecimal(3))).foldLeft(Digest.empty)(_ + _)
+    val dl = timeline.map(r => Digest.fromSum(r.getLong(1), r.getDecimal(3))).foldLeft(Digest.empty)(_ + _)
+    (s"trades=$dt timeline=$dl", f.toSeq)
   }
 }
 
@@ -264,6 +253,10 @@ final class CorpusDedup(seed: Long, dir: String) extends Workload {
     val (link, skip) = corpus.chainJaccards
     require(link >= 0.8 && skip < 0.8,
       s"generator broke its chain plant: link jaccard $link, two-link jaccard $skip")
+    // ngramJaccardPairs switches plan at 10 % copies; the benchmark
+    // measures the plan graft's own test data takes, below the switch
+    require(corpus.exactCopyShare < 0.05,
+      s"generator left the below-switch dedup plan: ${corpus.exactCopyShare} copies")
   }
 
   def generate(spark: SparkSession): Unit = Gen.writeDocuments(spark, dir, corpus)
@@ -324,7 +317,7 @@ final class CorpusDedup(seed: Long, dir: String) extends Workload {
     val dg = Digest.of(propRows.map(_.toSeq))
     PassOut(s"cleaned=$dk pairs=$dp groups=$dg", f.toSeq, Seq(ms), if (f.isEmpty) 0 else 1, Map(
       "dedup.pairs" -> pairRows.length.toDouble,
-      "cc.groups" -> expected.values.toSet.size.toDouble,
+      "cc.groups" -> propRows.map(_.getAs[Long]("group_id")).distinct.length.toDouble,
       "corpus.kept_ratio" -> kept.length.toDouble / corpus.docs.size))
   }
 }

@@ -84,6 +84,10 @@ object PureChecks {
       link >= 0.8 && skip < 0.8 && c.families.exists(_.ids.size >= 4) &&
         Gen.corpus(11, 3000) == c
     }
+    check("corpus plants 1 % exact copies, below ngramJaccardPairs' 10 % plan switch") {
+      val c = Gen.corpus(5, 1000)
+      math.abs(c.exactCopyShare - 0.01) < 1e-9 && c.families.count(_.exact) == 5
+    }
     println(if (failures == 0) "all checks passed" else s"$failures checks failed")
     sys.exit(if (failures == 0) 0 else 1)
   }
