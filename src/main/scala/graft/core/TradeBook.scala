@@ -20,7 +20,7 @@ object BookTrade {
   /** Fee-included normalized pnl of a CLOSED trade — the reference's
     * `pnl_normalized` (models.py:60-91): ((±(exit−entry)) − fee·entry −
     * fee·entry)/entry. The ONE definition of this expression shape:
-    * every consumer (batch blotter, sliced runner, streaming blotter)
+    * every consumer (the batch engine kernel, streaming blotter)
     * and the oracles' mirrored SQL must stay token-identical for
     * bit-exact parity.
     */
@@ -79,9 +79,10 @@ final class TradeBook(cfg: PnlConfig, trackTrades: Boolean = true) extends Seria
   }
 
   /** Closes a position; the blotter record is kept only when the caller
-    * consumes trades (`trackTrades`) — timeline-only runs would otherwise
-    * accumulate every closed trade of a symbol run in memory, breaking
-    * the O(open positions) state bound on signal-dense mega-symbols.
+    * consumes trades (`trackTrades`) — a caller that never drains them
+    * (the streaming timeline) would otherwise accumulate every closed
+    * trade of a symbol run in memory, breaking the O(open positions)
+    * state bound on signal-dense mega-symbols.
     */
   private def close(list: ArrayBuffer[OpenPos], idx: Int, price: Double, tsUs: Long, reason: String): Unit = {
     val p = list.remove(idx)

@@ -55,15 +55,6 @@ import org.apache.spark.sql.functions._
   */
 object ConnectedComponents {
 
-  /** Per-round instrumentation hook for measurement harnesses (r17,
-    * verdict item 5 — CcRoundsAB attributes the fourth-decade wall
-    * excess to round count vs per-round cost): called after each
-    * completed round with (algo, 1-based round index, round wall
-    * seconds). Null in production; one volatile read per ROUND, never
-    * per row, so the hot path pays nothing.
-    */
-  @volatile private[graft] var roundHook: (String, Int, Double) => Unit = null
-
   /** Unpersist the block-manager blocks behind a localCheckpointed
     * DataFrame (its analyzed plan is the `LogicalRDD` wrapping the
     * checkpointed RDD). `Dataset.unpersist` only touches the cache
@@ -287,7 +278,6 @@ object ConnectedComponents {
     var inFlight: DataFrame = null
     try {
       while (!converged) {
-        val roundT0 = System.nanoTime()
         iter += 1
         require(iter <= maxIter,
           s"connected components did not converge in $maxIter rounds — " +
@@ -323,8 +313,6 @@ object ConnectedComponents {
         prevSum = s
         labels = updated
         inFlight = null
-        val hook = roundHook
-        if (hook != null) hook("propagation", iter, (System.nanoTime() - roundT0) / 1e9)
       }
     } catch {
       case e: Throwable =>
@@ -465,7 +453,6 @@ object ConnectedComponents {
     var inFlight: DataFrame = null
     try {
       while (!converged) {
-        val roundT0 = System.nanoTime()
         iter += 1
         require(iter <= maxIter,
           s"star contraction did not converge in $maxIter rounds (O(log n) expected) — " +
@@ -482,8 +469,6 @@ object ConnectedComponents {
         edges = next
         inFlight = null
         dropCheckpointBlocks(superseded)
-        val hook = roundHook
-        if (hook != null) hook("star", iter, (System.nanoTime() - roundT0) / 1e9)
       }
     } catch {
       case e: Throwable =>

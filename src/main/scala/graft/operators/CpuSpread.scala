@@ -38,6 +38,17 @@ private[operators] object CpuSpread {
     */
   private[operators] val MinSpreadBytesDefault: Long = 64L << 10
 
+  private val MinBytesKey = "spark.graft.cpuSpread.minBytes"
+
+  /** The byte floor in force: [[MinBytesKey]] as a plain byte count, or
+    * the default. A malformed value fails naming the key and the value.
+    */
+  private def minSpreadBytes(df: DataFrame): Long =
+    df.sparkSession.conf.getOption(MinBytesKey).fold(MinSpreadBytesDefault) { v =>
+      v.toLongOption.getOrElse(throw new IllegalArgumentException(
+        s"$MinBytesKey must be a byte count, got '$v'"))
+    }
+
   /** (estimated scan partition count, data bytes) for a file-backed
     * frame WITHOUT forcing physical planning (r9:
     * `df.rdd.getNumPartitions` planned every multimodal query twice):
@@ -94,16 +105,10 @@ private[operators] object CpuSpread {
     scanInfo(df).map(_._1)
 
   /** One round-robin exchange when the scan cannot feed the cores;
-    * no-op otherwise. See object doc. `spark.graft.cpuSpread.enabled`
-    * (session conf, default true) is the measurement/deployment escape
-    * hatch — it exists so an interleaved same-JVM A/B can price the
-    * guard per query (r19) and so a deployment that KNOWS its scans
-    * are wide can pin the no-op without relying on the estimate.
+    * no-op otherwise. See object doc.
     */
   private[operators] def spread(
       df: DataFrame, plannedFallback: Boolean = false): DataFrame = {
-    if (!df.sparkSession.conf.get("spark.graft.cpuSpread.enabled", "true").toBoolean)
-      return df
     val par = df.sparkSession.sparkContext.defaultParallelism
     // Default: FILE-BACKED frames only (r19 A/B): a frame with no
     // file-scan leaf is an upstream operator's output (checkpoint, join
@@ -126,8 +131,7 @@ private[operators] object CpuSpread {
       // branch (Multimodal, in-memory frames) has no cheap byte
       // estimate and keeps its r8 semantics unchanged.
       case Some((e, bytes)) =>
-        val minBytes = df.sparkSession.conf
-          .get("spark.graft.cpuSpread.minBytes", MinSpreadBytesDefault.toString).toLong
+        val minBytes = minSpreadBytes(df)
         if (e < par && bytes >= minBytes) df.repartition(par) else df
       case None if plannedFallback && df.rdd.getNumPartitions < par =>
         df.repartition(par)

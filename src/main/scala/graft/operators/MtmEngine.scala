@@ -4,18 +4,26 @@ import graft.core.{BookTrade, OpenPos, PnlConfig, TradeBook}
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import scala.collection.mutable.ArrayBuffer
 
 /** Distributed mark-to-market engine — the Spark-native re-expression of
   * the reference's `Trade_Mtm_Runner.calculate` → `Mtm_Result` pipeline
   * (reference: runner_mtm.py:71-205, trade_reward.py:81-170).
   *
-  * Plan shape (SURVEY.md §4): canonical bars → `repartition($"symbol")` →
-  * `sortWithinPartitions(symbol, ts, event_id)` → `mapPartitions` running
-  * the [[graft.core.TradeBook]] state machine per symbol-run. ONE shuffle
-  * total; parallelism = #symbols spread by hash; per-task state is
-  * O(open positions) and rows stream through an iterator, so a skewed
-  * mega-symbol is wall-clock-bound but never OOMs. At 100 TB the symbol
-  * count vastly exceeds core count, so the hash spread stays even.
+  * One kernel, [[walk]], runs the [[graft.core.TradeBook]] state machine
+  * over a symbol-sorted partition: one book per symbol run, one row per
+  * bar ("tl") plus one row per closed or still-open trade ("bl"). Plan
+  * shape (SURVEY.md §4): canonical bars → `repartition($"symbol")` →
+  * `sortWithinPartitions(symbol, ts, event_id)` → `mapPartitions(walk)`.
+  * ONE shuffle total; parallelism = #symbols spread by hash; per-task
+  * state is O(open positions) — closed trades are drained every bar and
+  * rows stream through an iterator — so a skewed mega-symbol is
+  * wall-clock-bound but never OOMs. Three callers share the kernel:
+  *  - [[timeline]] and [[blotter]]: lazy `kind` projections of one walk;
+  *  - [[combinedRun]]: one walk materialized once, both projections
+  *    read from the stored blocks;
+  *  - [[runSliced]]: one walk per time slice, book state carried between
+  *    slices as rows of the same output type.
   *
   * Numeric discipline: per-bar mtm is pure double arithmetic (replicated
   * bit-for-bit by the DuckDB oracle); every cumulative/aggregated series
@@ -27,18 +35,28 @@ import org.apache.spark.sql.functions._
   */
 object MtmEngine {
 
-  /** Input bar (μs epoch; event_id tiebreaks equal timestamps). */
+  /** Input bar (μs epoch; event_id tiebreaks equal timestamps). In a
+    * sliced run, rows at `ts_us` = [[CarriedTs]] are carried book state
+    * (see [[walk]]).
+    */
   private[graft] final case class EngineBar(
       symbol: Long, ts_us: Long, event_id: Long, close: Double, buy: Int, sell: Int)
 
-  private[graft] final case class TimelinePoint(
-      symbol: Long, ts_us: Long, event_id: Long, close: Double,
-      buy: Int, sell: Int, mtm_ratio: Double)
+  /** The kernel's output row, discriminated by `kind`: "tl" timeline
+    * point, "bl" blotter record, "st" carried book state (sliced runs
+    * only — same columns as an [[EngineBar]], see [[walk]]).
+    */
+  private[graft] final case class EngineOut(
+      kind: String,
+      symbol: Long, ts_us: Long = 0L, event_id: Long = 0L, close: Double = 0.0,
+      buy: Int = 0, sell: Int = 0, mtm_ratio: Double = 0.0,
+      direction: String = "", entry_ts_us: Long = 0L, entry_price: Double = 0.0,
+      exit_ts_us: Option[Long] = None, exit_price: Option[Double] = None,
+      pnl_norm: Option[Double] = None, close_reason: Option[String] = None,
+      is_closed: Boolean = false)
 
-  private[graft] final case class BlotterRec(
-      symbol: Long, direction: String, entry_ts_us: Long, entry_price: Double,
-      exit_ts_us: Option[Long], exit_price: Option[Double],
-      pnl_norm: Option[Double], close_reason: Option[String], is_closed: Boolean)
+  /** `ts_us` of carried-state rows: sorts ahead of every bar of a symbol. */
+  private final val CarriedTs = Long.MinValue
 
   /** events → canonical bar view (SURVEY §2): user_id plays the symbol,
     * value the close price, purchase/click the buy/sell signals; every
@@ -58,6 +76,12 @@ object MtmEngine {
       when(col("event_type") === "purchase", 1).otherwise(0).as("buy"),
       when(col("event_type") === "click", 1).otherwise(0).as("sell"))
 
+  private def typedBars(bars: DataFrame): DataFrame =
+    bars.select(
+      col("symbol").cast("long"), col("ts_us").cast("long"),
+      col("event_id").cast("long"), col("close").cast("double"),
+      col("buy").cast("int"), col("sell").cast("int"))
+
   /** The engine's only shuffle: co-locate each symbol's bars and order
     * them totally within the partition (secondary sort). AQE partition
     * coalescing is safe: symbol runs stay contiguous because a symbol
@@ -66,11 +90,7 @@ object MtmEngine {
   private def sortedBars(bars: DataFrame, colocated: Boolean = false): Dataset[EngineBar] = {
     val spark = bars.sparkSession
     import spark.implicits._
-    val projected = bars
-      .select(
-        col("symbol").cast("long"), col("ts_us").cast("long"),
-        col("event_id").cast("long"), col("close").cast("double"),
-        col("buy").cast("int"), col("sell").cast("int"))
+    val projected = typedBars(bars)
     // colocated: the caller guarantees each symbol's bars already share
     // a partition (a symbol-bucketed table scan — BucketedTables.bars),
     // so the engine's one exchange is elided and only the in-partition
@@ -84,104 +104,127 @@ object MtmEngine {
       .as[EngineBar]
   }
 
-  /** Per-partition driver: a fresh TradeBook per symbol-run, price_diff
-    * derived from the previous bar in-stream (no window needed — the
-    * partition is already symbol-ordered).
+  /** The engine kernel: one pass over a symbol-sorted partition, a fresh
+    * [[TradeBook]] per symbol run, price_diff derived from the previous
+    * bar in-stream (the partition is already symbol-ordered, so no
+    * window is needed). Emits one "tl" row per bar, a "bl" row per trade
+    * closed on that bar, and at each run end either the still-open
+    * positions as OPEN "bl" rows or, with `carryOut`, the book as "st"
+    * rows for the next slice.
+    *
+    * Carried state is one "st" row holding the previous close
+    * (buy = sell = 0, close = previous close) plus one per open position
+    * (event_id = entry µs, close = entry price, buy or sell = 1-based
+    * index in its side's book order, which FIFO/LIFO/WorstPrice ties and
+    * the accrual's summation order depend on). With `carryIn`, input rows
+    * at [[CarriedTs]] are such state: they sort ahead of the run's bars
+    * and are restored into the run's fresh book before its first bar.
     */
-  private final class SymbolRunner(cfg: PnlConfig, trackTrades: Boolean = true)
-      extends Serializable {
+  private def walk(cfg: PnlConfig, carryIn: Boolean, carryOut: Boolean)(
+      bars: Iterator[EngineBar]): Iterator[EngineOut] = {
     var book: TradeBook = null
-    var symbol: Long = 0L
-    private var prevClose: Double = Double.NaN
+    var symbol = 0L
+    var prevClose = Double.NaN
+    val carried = new ArrayBuffer[EngineBar]
 
-    /** Open positions of the PREVIOUS symbol, flushed when `b` starts a
-      * new run (empty otherwise). Must be consumed before stepping `b`.
+    def side(isLong: Boolean) = if (isLong) "LONG" else "SHORT"
+
+    /** pnl_norm is the reference's fee-included `pnl_normalized`
+      * (models.py:60-91): ((±(exit−entry)) − fee·entry − fee·entry)/entry.
       */
-    def beginBar(b: EngineBar): Seq[(Long, BookTrade)] = {
-      if (book == null) {
-        book = new TradeBook(cfg, trackTrades); symbol = b.symbol; prevClose = Double.NaN
-        Nil
-      } else if (b.symbol != symbol) {
-        val flushed = book.flushOpen().map(t => (symbol, t))
-        book = new TradeBook(cfg, trackTrades); symbol = b.symbol; prevClose = Double.NaN
-        flushed
-      } else Nil
+    def tradeRow(t: BookTrade): EngineOut =
+      if (t.isClosed)
+        EngineOut("bl", symbol, direction = side(t.isLong),
+          entry_ts_us = t.entryUs, entry_price = t.entryPrice,
+          exit_ts_us = Some(t.exitUs), exit_price = Some(t.exitPrice),
+          pnl_norm = Some(BookTrade.closedPnlNorm(t, cfg.feeRate)),
+          close_reason = Some(t.reason), is_closed = true)
+      else
+        EngineOut("bl", symbol, direction = side(t.isLong),
+          entry_ts_us = t.entryUs, entry_price = t.entryPrice)
+
+    def restore(): Unit = if (carried.nonEmpty) {
+      def open(isLong: Boolean) = carried.toSeq
+        .filter(c => (if (isLong) c.buy else c.sell) > 0).sortBy(c => c.buy + c.sell)
+        .map(c => OpenPos(c.event_id, c.close, isLong))
+      book.restoreOpen(open(isLong = true), open(isLong = false))
+      carried.clear()
     }
 
-    /** Run one bar; returns its final mtm (accrual − fees). */
-    def stepBar(b: EngineBar): Double = {
-      val diff = if (prevClose.isNaN) Double.NaN else b.close - prevClose
-      prevClose = b.close
-      book.step(b.ts_us, b.close, diff, b.buy == 1, b.sell == 1)
-    }
+    def endRun(): Seq[EngineOut] =
+      if (book == null) Nil
+      else {
+        restore() // a run of carried state alone still ends its book
+        if (!carryOut) book.flushOpen().map(tradeRow)
+        else {
+          def rows(side: Seq[OpenPos]) = side.zipWithIndex.map { case (p, i) =>
+            EngineOut("st", symbol, CarriedTs, p.entryUs, p.entryPrice,
+              buy = if (p.isLong) i + 1 else 0, sell = if (p.isLong) 0 else i + 1)
+          }
+          val (ls, ss) = book.snapshotOpen()
+          EngineOut("st", symbol, CarriedTs, close = prevClose) +: (rows(ls) ++ rows(ss))
+        }
+      }
 
-    def endOfPartition(): Seq[(Long, BookTrade)] =
-      if (book == null) Nil else book.flushOpen().map(t => (symbol, t))
+    val perBar = bars.flatMap { b =>
+      val ended =
+        if (book == null || b.symbol != symbol) {
+          val out = endRun()
+          book = new TradeBook(cfg); symbol = b.symbol; prevClose = Double.NaN
+          out
+        } else Nil
+      if (carryIn && b.ts_us == CarriedTs) {
+        if (b.buy == 0 && b.sell == 0) prevClose = b.close else carried += b
+        ended.iterator
+      } else {
+        restore()
+        val diff = if (prevClose.isNaN) Double.NaN else b.close - prevClose
+        prevClose = b.close
+        val mtm = book.step(b.ts_us, b.close, diff, b.buy == 1, b.sell == 1)
+        val closed = book.drainTrades().map(tradeRow)
+        ended.iterator ++
+          Iterator.single(EngineOut("tl", b.symbol, b.ts_us, b.event_id, b.close,
+            b.buy, b.sell, mtm)) ++
+          closed.iterator
+      }
+    }
+    // Iterator.++ takes its suffix BY NAME: the last run's flush or state
+    // is built only after perBar exhausts the partition
+    perBar ++ endRun().iterator
   }
+
+  private def run(
+      sorted: Dataset[EngineBar], cfg: PnlConfig,
+      carryIn: Boolean = false, carryOut: Boolean = false): DataFrame = {
+    val spark = sorted.sparkSession
+    import spark.implicits._
+    sorted.mapPartitions(walk(cfg, carryIn, carryOut)).toDF()
+  }
+
+  /** Per-bar timeline rows of a kernel output. */
+  private def timelineOf(out: DataFrame): DataFrame =
+    out.filter(col("kind") === "tl")
+      .select("symbol", "ts_us", "event_id", "close", "buy", "sell", "mtm_ratio")
+
+  /** Blotter rows of a kernel output. */
+  private def blotterOf(out: DataFrame): DataFrame =
+    out.filter(col("kind") === "bl")
+      .select("symbol", "direction", "entry_ts_us", "entry_price",
+        "exit_ts_us", "exit_price", "pnl_norm", "close_reason", "is_closed")
 
   /** Per-bar mtm timeline: (symbol, ts_us, event_id, close, buy, sell,
     * mtm_ratio) — the reference's `mtm_history` (trade_reward.py:109,166),
     * one row per input bar.
     */
-  def timeline(bars: DataFrame, cfg: PnlConfig, colocated: Boolean = false): DataFrame = {
-    val spark = bars.sparkSession
-    import spark.implicits._
-    sortedBars(bars, colocated).mapPartitions { it =>
-      // trackTrades=false: timeline consumers never drain the blotter, so
-      // recording closed trades would grow per-task memory with the
-      // symbol's trade count instead of O(open positions)
-      val r = new SymbolRunner(cfg, trackTrades = false)
-      it.map { b =>
-        r.beginBar(b) // timeline ignores blotter flushes; resets state
-        TimelinePoint(b.symbol, b.ts_us, b.event_id, b.close, b.buy, b.sell, r.stepBar(b))
-      }
-    }.toDF()
-  }
+  def timeline(bars: DataFrame, cfg: PnlConfig, colocated: Boolean = false): DataFrame =
+    timelineOf(run(sortedBars(bars, colocated), cfg))
 
   /** Trade blotter: closed trades (reference `archive_*_positions_list`)
     * plus still-open positions flushed as OPEN rows (reference
     * `outstanding_*` in Mtm_Result, runner_mtm.py:191-203).
-    * pnl_norm is the reference's fee-included `pnl_normalized`
-    * (models.py:60-91): ((±(exit−entry)) − fee·entry − fee·entry)/entry.
     */
-  def blotter(bars: DataFrame, cfg: PnlConfig, colocated: Boolean = false): DataFrame = {
-    val spark = bars.sparkSession
-    import spark.implicits._
-    val feeRate = cfg.feeRate
-    sortedBars(bars, colocated).mapPartitions { it =>
-      val r = new SymbolRunner(cfg)
-      def toRec(sym: Long, t: BookTrade): BlotterRec =
-        if (t.isClosed) {
-          val pnl = BookTrade.closedPnlNorm(t, feeRate)
-          BlotterRec(sym, if (t.isLong) "LONG" else "SHORT", t.entryUs, t.entryPrice,
-            Some(t.exitUs), Some(t.exitPrice), Some(pnl), Some(t.reason), is_closed = true)
-        } else {
-          BlotterRec(sym, if (t.isLong) "LONG" else "SHORT", t.entryUs, t.entryPrice,
-            None, None, None, None, is_closed = false)
-        }
-      val perBar = it.flatMap { b =>
-        val flushed = r.beginBar(b)
-        r.stepBar(b)
-        val closed = r.book.drainTrades().map(t => (r.symbol, t))
-        (flushed.iterator ++ closed.iterator).map { case (s, t) => toRec(s, t) }
-      }
-      // Iterator.++ takes its suffix BY NAME: the end-of-partition flush
-      // is built only after perBar exhausts the partition
-      perBar ++ r.endOfPartition().iterator.map { case (s, t) => toRec(s, t) }
-    }.toDF()
-  }
-
-  /** Unified single-pass output row, discriminated by `kind`:
-    * "tl" timeline point, "bl" blotter record — see [[combinedRun]].
-    */
-  private[graft] final case class EngineOut(
-      kind: String,
-      symbol: Long, ts_us: Long = 0L, event_id: Long = 0L, close: Double = 0.0,
-      buy: Int = 0, sell: Int = 0, mtm_ratio: Double = 0.0,
-      direction: String = "", entry_ts_us: Long = 0L, entry_price: Double = 0.0,
-      exit_ts_us: Option[Long] = None, exit_price: Option[Double] = None,
-      pnl_norm: Option[Double] = None, close_reason: Option[String] = None,
-      is_closed: Boolean = false)
+  def blotter(bars: DataFrame, cfg: PnlConfig, colocated: Boolean = false): DataFrame =
+    blotterOf(run(sortedBars(bars, colocated), cfg))
 
   /** BOTH output families from ONE engine pass: one shuffle, one sort,
     * one state-machine walk, materialized once; the returned frames are
@@ -193,136 +236,22 @@ object MtmEngine {
     */
   private[graft] def combinedRun(
       bars: DataFrame, cfg: PnlConfig, colocated: Boolean = false): (DataFrame, DataFrame) = {
-    val spark = bars.sparkSession
-    import spark.implicits._
-    val feeRate = cfg.feeRate
-    val out = sortedBars(bars, colocated).mapPartitions { it =>
-      val r = new SymbolRunner(cfg) // trackTrades: drained per bar below
-      def toOut(sym: Long, t: BookTrade): EngineOut =
-        if (t.isClosed) {
-          val pnl = BookTrade.closedPnlNorm(t, feeRate)
-          EngineOut("bl", sym, direction = if (t.isLong) "LONG" else "SHORT",
-            entry_ts_us = t.entryUs, entry_price = t.entryPrice,
-            exit_ts_us = Some(t.exitUs), exit_price = Some(t.exitPrice),
-            pnl_norm = Some(pnl), close_reason = Some(t.reason), is_closed = true)
-        } else {
-          EngineOut("bl", sym, direction = if (t.isLong) "LONG" else "SHORT",
-            entry_ts_us = t.entryUs, entry_price = t.entryPrice)
-        }
-      val perBar = it.flatMap { b =>
-        val flushed = r.beginBar(b)
-        val mtm = r.stepBar(b)
-        val closed = r.book.drainTrades().map(t => (r.symbol, t))
-        Iterator.single(
-          EngineOut("tl", b.symbol, b.ts_us, b.event_id, b.close, b.buy, b.sell, mtm)) ++
-          (flushed.iterator ++ closed.iterator).map { case (s, t) => toOut(s, t) }
-      }
-      // by-name ++ suffix: built only after perBar drains the partition
-      perBar ++ r.endOfPartition().iterator.map { case (s, t) => toOut(s, t) }
-      // EAGER (r16 lazy-checkpoint audit): pnlSummary consumes BOTH
-      // returned frames in one job — the tl and bl aggregates' map
-      // stages are independent and, lazy, race the block store, each
-      // loser re-running the whole engine mapPartitions pass (the
-      // priciest kernel in the MTM family). Single-frame callers pay
-      // the same one materialization job, just at construction.
-    }.toDF().localCheckpoint(eager = true)
-    val tl = out.filter(col("kind") === "tl")
-      .select("symbol", "ts_us", "event_id", "close", "buy", "sell", "mtm_ratio")
-    val bl = out.filter(col("kind") === "bl")
-      .select("symbol", "direction", "entry_ts_us", "entry_price",
-        "exit_ts_us", "exit_price", "pnl_norm", "close_reason", "is_closed")
-    (tl, bl)
+    // EAGER: pnlSummary consumes both returned frames in one job, whose
+    // timeline and blotter aggregate stages are independent; a lazy
+    // checkpoint lets them race the block store, and each loser re-runs
+    // the whole walk. Single-frame callers pay the same one job, at
+    // construction.
+    val out = run(sortedBars(bars, colocated), cfg).localCheckpoint(eager = true)
+    (timelineOf(out), blotterOf(out))
   }
 
   // ---- time-sliced execution (mega-symbol skew hardening, SURVEY §4) ----
 
-  /** Unified slice-input row: a market bar, or (isState) the carried-in
-    * book state of a symbol from the previous slice. State rows take
-    * ts_us = Long.MinValue so the per-partition sort places them before
-    * every bar of their symbol run.
-    */
-  private[graft] final case class SliceIn(
-      symbol: Long, ts_us: Long, event_id: Long, close: Double, buy: Int, sell: Int,
-      isState: Boolean, prevClose: Double,
-      openLongs: Seq[(Long, Double)], openShorts: Seq[(Long, Double)])
-
-  /** Unified slice-output row, discriminated by `kind`:
-    * "tl" timeline point, "bl" blotter record, "st" end-of-slice state.
-    */
-  private[graft] final case class SliceOut(
-      kind: String,
-      symbol: Long, ts_us: Long = 0L, event_id: Long = 0L, close: Double = 0.0,
-      buy: Int = 0, sell: Int = 0, mtm_ratio: Double = 0.0,
-      direction: String = null, entry_ts_us: Long = 0L, entry_price: Double = 0.0,
-      exit_ts_us: Option[Long] = None, exit_price: Option[Double] = None,
-      pnl_norm: Option[Double] = None, close_reason: Option[String] = None,
-      is_closed: Boolean = false,
-      prevClose: Double = Double.NaN,
-      openLongs: Seq[(Long, Double)] = Nil, openShorts: Seq[(Long, Double)] = Nil)
-
-  private def sliceRunner(cfg: PnlConfig, isLast: Boolean)(
-      it: Iterator[SliceIn]): Iterator[SliceOut] = {
-    var book: TradeBook = null
-    var symbol = 0L
-    var prevClose = Double.NaN
-
-    def blRow(sym: Long, t: BookTrade): SliceOut =
-      if (t.isClosed) {
-        SliceOut("bl", sym,
-          direction = if (t.isLong) "LONG" else "SHORT",
-          entry_ts_us = t.entryUs, entry_price = t.entryPrice,
-          exit_ts_us = Some(t.exitUs), exit_price = Some(t.exitPrice),
-          pnl_norm = Some(BookTrade.closedPnlNorm(t, cfg.feeRate)),
-          close_reason = Some(t.reason), is_closed = true)
-      } else
-        SliceOut("bl", sym,
-          direction = if (t.isLong) "LONG" else "SHORT",
-          entry_ts_us = t.entryUs, entry_price = t.entryPrice)
-
-    def endRun(): Seq[SliceOut] =
-      if (book == null) Nil
-      else if (isLast) book.flushOpen().map(t => blRow(symbol, t))
-      else {
-        val (ls, ss) = book.snapshotOpen()
-        Seq(SliceOut("st", symbol, prevClose = prevClose,
-          openLongs = ls.map(p => (p.entryUs, p.entryPrice)),
-          openShorts = ss.map(p => (p.entryUs, p.entryPrice))))
-      }
-
-    val perRow = it.flatMap { r =>
-      val boundary =
-        if (book == null || r.symbol != symbol) {
-          val fin = endRun()
-          book = new TradeBook(cfg); symbol = r.symbol; prevClose = Double.NaN
-          fin
-        } else Nil
-      if (r.isState) {
-        book.restoreOpen(
-          r.openLongs.map { case (ts, px) => OpenPos(ts, px, isLong = true) },
-          r.openShorts.map { case (ts, px) => OpenPos(ts, px, isLong = false) })
-        prevClose = r.prevClose
-        boundary.iterator
-      } else {
-        val diff = if (prevClose.isNaN) Double.NaN else r.close - prevClose
-        prevClose = r.close
-        val mtm = book.step(r.ts_us, r.close, diff, r.buy == 1, r.sell == 1)
-        val closed = book.drainTrades().map(t => blRow(symbol, t))
-        boundary.iterator ++
-          Iterator(SliceOut("tl", r.symbol, r.ts_us, r.event_id, r.close,
-            r.buy, r.sell, mtm_ratio = mtm)) ++
-          closed.iterator
-      }
-    }
-    // Iterator.++ takes its suffix BY NAME: the final symbol run's
-    // flush/state is built only after perRow exhausts the partition
-    perRow ++ endRun().iterator
-  }
-
   /** Time-sliced engine run: bars split into `nSlices` ranges at
     * approximate ts quantiles; each slice runs the normal
-    * repartition-sort-mapPartitions pipeline seeded with the previous
-    * slice's per-symbol book snapshots (open positions + previous
-    * close), materialized slice-by-slice. Output (timeline, blotter) is
+    * repartition-sort-walk pipeline seeded with the previous slice's
+    * per-symbol book state (open positions + previous close),
+    * materialized slice-by-slice. Output (timeline, blotter) is
     * bar-for-bar identical to the unsliced engine — spec'd in
     * MtmEngineSpec with a planted mega-symbol.
     *
@@ -340,8 +269,8 @@ object MtmEngine {
     * mid-run fails the job unrecoverably rather than recomputing. For
     * multi-hour runs on preemptible fleets, wire the inter-slice seam
     * to durable storage instead: write each slice's end-state (the
-    * O(symbols × max_position) SliceOut "st" rows) to parquet and seed
-    * the next slice from that table — same seam, restartable.
+    * O(symbols × max_position) "st" rows) to parquet and seed the next
+    * slice from that table — same seam, restartable.
     */
   def runSliced(bars: DataFrame, cfg: PnlConfig, nSlices: Int): (DataFrame, DataFrame) = {
     require(nSlices >= 1, "need at least one slice")
@@ -372,60 +301,36 @@ object MtmEngine {
       s"slice cuts must be strictly ascending, got $cutsUs")
     val spark = bars.sparkSession
     import spark.implicits._
-    val typed = bars.select(
-      col("symbol").cast("long"), col("ts_us").cast("long"),
-      col("event_id").cast("long"), col("close").cast("double"),
-      col("buy").cast("int"), col("sell").cast("int"))
+    // a bar at the carried-state timestamp would be read as state
+    val typed = typedBars(bars).withColumn("ts_us",
+      when(col("ts_us") === CarriedTs,
+        raise_error(lit(s"runSliced: ts_us = $CarriedTs is reserved for carried state")))
+        .otherwise(col("ts_us")))
     val cuts = cutsUs.toArray
-    var state: Dataset[SliceIn] = spark.emptyDataset[SliceIn]
+    var carried = spark.emptyDataset[EngineBar].toDF()
     val parts = (0 to cuts.length).map { i =>
       val lo = if (i == 0) None else Some(cuts(i - 1))
       val hi = if (i == cuts.length) None else Some(cuts(i))
-      val isLast = i == cuts.length
       val sliceBars = typed
         .filter(lo.map(col("ts_us") >= _).getOrElse(lit(true))
           && hi.map(col("ts_us") < _).getOrElse(lit(true)))
-        .as[EngineBar]
-        .map(b => SliceIn(b.symbol, b.ts_us, b.event_id, b.close, b.buy, b.sell,
-          isState = false, Double.NaN, Nil, Nil))
-      // LAZY local checkpoint: marks the slice output for storage without
-      // launching a job per slice — the consumer's single action computes
-      // the whole slice chain as one job (5× fewer job launches), each
-      // slice's partitions are stored as they are first computed, and
-      // slice i+1 (and the final union) read the stored partitions
-      // instead of recomputing 0..i.
-      // SAFE LAZY (r16 audit): unlike the multi-branch shapes flipped
-      // eager this round, no two stages can read slice i's blocks
-      // concurrently — slice i's only same-job consumers are slice
-      // i+1's map stage and the final-union result stage, and the
-      // latter transitively depends on the LAST slice's shuffle, which
-      // orders it after every chain stage. Caveat recorded: a caller
-      // consuming BOTH returned frames in one job would put two
-      // unordered branches on the last slice — today's only sliced
-      // caller (q_trades_sliced) reads the blotter frame alone.
-      val out = sliceBars.union(state)
-        .repartition(col("symbol"))
-        .sortWithinPartitions("symbol", "ts_us", "event_id")
-        .as[SliceIn]
-        .mapPartitions(sliceRunner(cfg, isLast))
-        .toDF()
+      // LAZY local checkpoint: the consumer's single action computes the
+      // whole slice chain as one job, storing each slice's partitions as
+      // they are first computed, so slice i+1 and the final union read
+      // them instead of recomputing slices 0..i. Safe only while no two
+      // stages of one job read slice i's blocks concurrently: its
+      // same-job consumers are slice i+1's map stage and the final
+      // union's result stage, which depends on the last slice's shuffle
+      // and so runs after every chain stage. A caller consuming BOTH
+      // returned frames in one job would break this on the last slice.
+      val out = run(sortedBars(sliceBars.union(carried)), cfg,
+          carryIn = true, carryOut = i < cuts.length)
         .localCheckpoint(eager = false)
-      state = out.filter(col("kind") === "st")
-        .select("symbol", "prevClose", "openLongs", "openShorts")
-        .as[(Long, Double, Seq[(Long, Double)], Seq[(Long, Double)])]
-        .map { case (sym, pc, ls, ss) =>
-          SliceIn(sym, Long.MinValue, 0L, 0.0, 0, 0, isState = true, pc, ls, ss)
-        }
+      carried = out.filter(col("kind") === "st")
+        .select("symbol", "ts_us", "event_id", "close", "buy", "sell")
       out
     }
-    val tl = parts.map(_.filter(col("kind") === "tl")
-      .select("symbol", "ts_us", "event_id", "close", "buy", "sell", "mtm_ratio"))
-      .reduce(_.unionAll(_))
-    val bl = parts.map(_.filter(col("kind") === "bl")
-      .select("symbol", "direction", "entry_ts_us", "entry_price",
-        "exit_ts_us", "exit_price", "pnl_norm", "close_reason", "is_closed"))
-      .reduce(_.unionAll(_))
-    (tl, bl)
+    (parts.map(timelineOf).reduce(_.unionAll(_)), parts.map(blotterOf).reduce(_.unionAll(_)))
   }
 
   // ---- query-surface wrappers (timestamps restored to TIMESTAMP μs) ----

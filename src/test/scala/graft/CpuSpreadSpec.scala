@@ -14,7 +14,8 @@ import org.scalatest.funsuite.AnyFunSuite
   *    survivors net-negative),
   *  - plannedFallback=true (Multimodal): an under-parallel frame
   *    spreads even without a file-scan leaf, via the planned count,
-  *  - spark.graft.cpuSpread.enabled=false pins the no-op everywhere.
+  *  - file-backed frames under the `spark.graft.cpuSpread.minBytes`
+  *    byte floor are not spread.
   */
 class CpuSpreadSpec extends AnyFunSuite {
 
@@ -82,15 +83,16 @@ class CpuSpreadSpec extends AnyFunSuite {
     }
   }
 
-  test("the escape hatch pins the no-op for both policies") {
-    withConf("spark.graft.cpuSpread.enabled", "false") {
-      val df = narrow()
-      assert(CpuSpread.spread(df, plannedFallback = true)
-        .rdd.getNumPartitions === 1)
-      val dir = java.nio.file.Files.createTempDirectory("cpuspread2").toString
-      df.write.mode("overwrite").parquet(dir)
-      assert(CpuSpread.spread(spark.read.parquet(dir))
-        .rdd.getNumPartitions === 1)
+  test("a malformed minBytes fails naming the key and the value") {
+    val dir = java.nio.file.Files.createTempDirectory("cpuspread_conf").toString
+    narrow().write.mode("overwrite").parquet(dir)
+    val scan = spark.read.parquet(dir)
+    for (bad <- Seq("64k", "1.5e6", "")) {
+      val e = withConf("spark.graft.cpuSpread.minBytes", bad) {
+        intercept[IllegalArgumentException](CpuSpread.spread(scan))
+      }
+      assert(e.getMessage.contains("spark.graft.cpuSpread.minBytes") &&
+        e.getMessage.contains(s"'$bad'"), e.getMessage)
     }
   }
 }

@@ -31,9 +31,8 @@ import java.util.concurrent.atomic.AtomicLong
   */
 object IvfDedupProfile {
   /** Bumped by hand whenever the operator-under-test's kernel changes
-    * meaningfully: parse_r16_logs.py refuses to min-merge concatenated
-    * logs whose generations differ, so per-tag "bests" can never mix
-    * two different operators (the r16 flat-vs-twolevel hazard).
+    * meaningfully, so logs of two different operators are never merged
+    * into one per-tag "best".
     */
   private val harnessGen = "hierfit-r17"
 

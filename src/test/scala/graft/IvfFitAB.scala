@@ -13,10 +13,9 @@ import graft.operators.Similarity
   * cancels at the grid level the way it cannot for distributed runs.
   * CAVEAT (r17 review): each reported wall still INCLUDES its call's
   * own sample-draw job — the draw is not timed separately, so
-  * small-nCells hier walls are draw-dominated and can invert
-  * (parse_r17_logs' monotonicity flagger annotates those points
-  * in-key); read the FLAT column's growth and the large-nCells hier
-  * points, never small-nCells hier deltas.
+  * small-nCells hier walls are draw-dominated and can invert; read the
+  * FLAT column's growth and the large-nCells hier points, never
+  * small-nCells hier deltas.
   *
   * Per grid point prints
   *   [ivffit] nCells=<n> cells=<returned> hier=<s> flat=<s|skipped>

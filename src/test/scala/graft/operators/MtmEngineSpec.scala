@@ -1,8 +1,8 @@
 package graft.operators
 
 import graft.{Sessions, Tables}
-import graft.core.{PnlConfig, RefSim}
-import org.apache.spark.sql.SparkSession
+import graft.core.{InventoryMode, PnlConfig, RefSim}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -86,6 +86,20 @@ class MtmEngineSpec extends AnyFunSuite {
     }
   }
 
+  /** Blotter multiset — not a set: two legitimately identical blotter
+    * rows (same prices/timestamps on different trades) must not mask a
+    * dropped or doubled record at a slice boundary.
+    */
+  private def blBag(df: org.apache.spark.sql.DataFrame) =
+    df.select("symbol", "direction", "entry_ts_us", "entry_price",
+      "exit_ts_us", "pnl_norm", "close_reason", "is_closed").collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getDouble(3),
+        if (r.isNullAt(4)) -1L else r.getLong(4),
+        // stringified: NaN (open rows) would fail numeric equality
+        if (r.isNullAt(5)) "null" else r.getDouble(5).toString,
+        if (r.isNullAt(6)) "OPEN" else r.getString(6), r.getBoolean(7)))
+      .groupBy(identity).map { case (k, v) => k -> v.length }
+
   test("time-sliced run equals the unsliced engine under a planted mega-symbol") {
     // collapse half the users into symbol 777 → one symbol carries ~50%
     // of all bars (the skew case slicing exists for); event_id keeps
@@ -109,18 +123,6 @@ class MtmEngineSpec extends AnyFunSuite {
       assert(java.lang.Double.compare(sliced(k), v) == 0, s"bar $k: ${sliced(k)} vs $v")
     }
 
-    // multiset, not set: two legitimately identical blotter rows (same
-    // prices/timestamps on different trades) must not mask a dropped or
-    // doubled record at a slice boundary
-    def blBag(df: org.apache.spark.sql.DataFrame) =
-      df.select("symbol", "direction", "entry_ts_us", "entry_price",
-        "exit_ts_us", "pnl_norm", "close_reason", "is_closed").collect()
-        .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getDouble(3),
-          if (r.isNullAt(4)) -1L else r.getLong(4),
-          // stringified: NaN (open rows) would fail numeric equality
-          if (r.isNullAt(5)) "null" else r.getDouble(5).toString,
-          if (r.isNullAt(6)) "OPEN" else r.getString(6), r.getBoolean(7)))
-        .groupBy(identity).map { case (k, v) => k -> v.length }
     val gotBl = blBag(slBl)
     val expBl = blBag(MtmEngine.blotter(bars, cfg))
     assert(gotBl == expBl,
@@ -138,6 +140,7 @@ class MtmEngineSpec extends AnyFunSuite {
       df.select("symbol", "ts_us", "event_id", "mtm_ratio").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)) -> r.getDouble(3)).toMap
     val exact = tlKey(MtmEngine.timeline(bars, cfg))
+    val exactBl = blBag(MtmEngine.blotter(bars, cfg))
     val span = maxTs - minTs
     // degenerate cut sets: empty slices at both ends (cuts outside the
     // data range), a cut exactly ON the min (first slice empty), dense
@@ -151,11 +154,15 @@ class MtmEngineSpec extends AnyFunSuite {
       Seq(minTs + span / 100, minTs + span / 50, minTs + span / 25),
       randomCuts)
     for (cuts <- cutSets) {
-      val sliced = tlKey(MtmEngine.runSliced(bars, cfg, cuts)._1)
+      val (slTl, slBl) = MtmEngine.runSliced(bars, cfg, cuts)
+      val sliced = tlKey(slTl)
       assert(sliced.keySet == exact.keySet, s"row set diverged for cuts $cuts")
       exact.foreach { case (k, v) =>
         assert(java.lang.Double.compare(sliced(k), v) == 0, s"cuts $cuts bar $k")
       }
+      // cuts past the data's end leave symbols whose last slice holds
+      // only carried state: their OPEN flushes must still appear once
+      assert(blBag(slBl) == exactBl, s"blotter diverged for cuts $cuts")
     }
     // overlapping/unsorted cuts would silently duplicate rows — rejected
     intercept[IllegalArgumentException] {
@@ -212,5 +219,76 @@ class MtmEngineSpec extends AnyFunSuite {
     val bars = MtmEngine.barsFromEvents(Tables.events(spark, sfDir))
     val n = bars.count()
     assert(MtmEngine.timeline(bars, PnlConfig.default).count() == n)
+  }
+
+  /** Drives every `TradeBook` path: ROI ladder, stop-loss, shorts, three
+    * positions per side closed by worst price, fees and laid-back tax.
+    */
+  private val everyPathCfg = PnlConfig(
+    roi = Map(0 -> 0.2, 60 -> 0.1, 1440 -> 0.02), stoploss = -0.05,
+    enableShortPosition = true, maxPositionPerSymbol = 3,
+    inventoryMode = InventoryMode.WorstPrice, feeRate = 0.001, laidBackTax = 0.0001)
+
+  /** Row multiset with doubles compared by bit pattern (0.0 ≠ -0.0). */
+  private def bitBag(df: DataFrame): Map[Seq[Any], Int] =
+    df.collect().toSeq.map(_.toSeq.map {
+      case d: Double => ("f64", java.lang.Double.doubleToLongBits(d))
+      case v => v
+    }).groupBy(identity).map { case (k, v) => k -> v.length }
+
+  // the engine's three callers — the lazy query projections, the
+  // checkpointed MtmRunner.calculate run and runSliced — agree bit for bit
+  test("calculate, the lazy queries and a one-slice runSliced agree bit for bit") {
+    val bars = MtmEngine.barsFromEvents(Tables.events(spark, sfDir))
+    val res = MtmRunner.calculate(bars, everyPathCfg)
+    val (slTl, slBl) = MtmEngine.runSliced(bars, everyPathCfg, Seq.empty[Long])
+
+    val tl = bitBag(MtmEngine.timelineQuery(bars, everyPathCfg))
+    assert(tl.nonEmpty)
+    assert(bitBag(res.timeline) == tl)
+    assert(bitBag(MtmEngine.timelineQueryFrom(slTl)) == tl)
+
+    val blDf = MtmEngine.blotterQuery(bars, everyPathCfg)
+    val bl = bitBag(blDf)
+    assert(bitBag(res.trades) == bl)
+    assert(bitBag(MtmEngine.blotterQueryFrom(slBl)) == bl)
+
+    // the config really reaches every close path, both sides and the
+    // position cap (WorstPrice only matters with several open per side)
+    val reasons = blDf.select(coalesce(col("close_reason"), lit("OPEN")))
+      .distinct().collect().map(_.getString(0)).toSet
+    assert(reasons == Set("ROI", "STOP_LOSS", "SIGNAL", "OPEN"), s"reasons $reasons")
+    assert(blDf.select("direction").distinct().count() == 2)
+    // two same-side positions open at once, so the position cap and the
+    // WorstPrice choice have several positions to act on
+    val b = blDf.select(col("symbol"), col("direction"),
+      unix_micros(col("entry_ts")).as("e"), unix_micros(col("exit_ts")).as("x"))
+    val overlaps = b.as("p").join(b.as("q"),
+        col("p.symbol") === col("q.symbol") && col("p.direction") === col("q.direction") &&
+          col("q.e") > col("p.e") && (col("p.x").isNull || col("q.e") < col("p.x")))
+      .count()
+    assert(overlaps > 0, "no symbol ever holds two positions on one side")
+  }
+
+  test("slices carrying several open positions per side equal the unsliced engine") {
+    // no ROI or stop-loss: positions close only on signals, so books of
+    // up to three positions per side cross the slice seams, and FIFO's
+    // pick depends on the carried book order
+    val fifo = PnlConfig(enableShortPosition = true, maxPositionPerSymbol = 3)
+    val bars = MtmEngine.barsFromEvents(Tables.events(spark, sfDir))
+    val Array(lo, hi) = bars.agg(min(col("ts_us")), max(col("ts_us"))).head()
+      .toSeq.map(_.asInstanceOf[Long]).toArray
+    val cuts = (1 until 20).map(i => lo + (hi - lo) * i / 20)
+    val (slTl, slBl) = MtmEngine.runSliced(bars, fifo, cuts)
+    assert(bitBag(MtmEngine.timelineQueryFrom(slTl)) == bitBag(MtmEngine.timelineQuery(bars, fifo)))
+    assert(bitBag(MtmEngine.blotterQueryFrom(slBl)) == bitBag(MtmEngine.blotterQuery(bars, fifo)))
+  }
+
+  test("runSliced rejects a bar at the timestamp reserved for carried state") {
+    import spark.implicits._
+    val bars = Seq((1L, Long.MinValue, 1L, 10.0, 1, 0), (1L, 5L, 2L, 11.0, 0, 0))
+      .toDF("symbol", "ts_us", "event_id", "close", "buy", "sell")
+    val e = intercept[Exception](MtmEngine.runSliced(bars, everyPathCfg, Seq(3L))._1.collect())
+    assert(e.getMessage.contains("reserved for carried state"), e.getMessage)
   }
 }
