@@ -1,12 +1,15 @@
 package graft.operators
 
+import java.math.BigInteger
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Engine-agnostic exact summation of doubles — the ONE definition of
   * the quantize-then-sum idiom used by every order-dependent aggregate
   * (MtmEngine 1e-9 pnl units, Analytics/StreamingJobs 1e-6 price units,
-  * SignalCompression's closed-form cumulative).
+  * SignalCompression's closed-form cumulative): `Column` forms for Spark
+  * plans, and [[unitsOf]]/[[RunningSum]] for the MTM kernel's in-walk
+  * summary fold.
   *
   * Why this shape: floor(x·scale + 0.5) is pure IEEE arithmetic and
   * therefore bit-identical in every engine, unlike a double→DECIMAL cast
@@ -20,6 +23,9 @@ import org.apache.spark.sql.functions._
   */
 private[graft] object ExactNum {
 
+  /** 2^63: the first |x·scale + 0.5| that no longer floors to a Long. */
+  private final val UnitsLimit = 9.223372036854776e18
+
   /** floor(x·scale + 0.5) as a DECIMAL(30,0) unit count.
     *
     * Per-row range: |x|·scale must stay below 2^63 — Spark's long-valued
@@ -30,11 +36,59 @@ private[graft] object ExactNum {
     */
   def units(c: Column, scale: Double): Column = {
     val scaled = c * lit(scale) + lit(0.5)
-    when(abs(scaled) >= lit(9.223372036854776e18),
+    when(abs(scaled) >= lit(UnitsLimit),
       raise_error(concat(
         lit(s"ExactNum.units overflow at scale $scale: "), scaled.cast("string"))))
       .otherwise(floor(scaled))
       .cast("decimal(30,0)")
+  }
+
+  /** [[units]] of one double, for code that folds rows itself (the MTM
+    * kernel): the same IEEE expression, and the same loud failure where
+    * the `Column` form raises — |x·scale + 0.5| ≥ 2^63, NaN included.
+    */
+  def unitsOf(x: Double, scale: Double): Long = {
+    val scaled = x * scale + 0.5
+    if (!(math.abs(scaled) < UnitsLimit))
+      throw new ArithmeticException(s"ExactNum.units overflow at scale $scale: $scaled")
+    math.floor(scaled).toLong
+  }
+
+  /** An exact running sum of unit counts, with its running peak (floored
+    * at 0) and the largest fall below that peak — the scalar twin of a
+    * DECIMAL(30,0) `sum(units)` window. Long arithmetic until a step
+    * overflows, BigInteger from then on: it never wraps.
+    */
+  final class RunningSum {
+    private var sum, peak, fall = 0L
+    private var wSum, wPeak, wFall: BigInteger = _ // set once a Long step overflows
+
+    def add(units: Long): Unit =
+      if (wSum == null) {
+        try {
+          val s = Math.addExact(sum, units)
+          val p = math.max(peak, s)
+          val f = Math.subtractExact(p, s)
+          sum = s; peak = p; if (f > fall) fall = f
+        } catch {
+          case _: ArithmeticException =>
+            wSum = BigInteger.valueOf(sum); wPeak = BigInteger.valueOf(peak)
+            wFall = BigInteger.valueOf(fall)
+            add(units)
+        }
+      } else {
+        wSum = wSum.add(BigInteger.valueOf(units))
+        wPeak = wPeak.max(wSum)
+        wFall = wFall.max(wPeak.subtract(wSum))
+      }
+
+    /** The sum back to double, as [[toDouble]] does: one division. */
+    def total(scale: Double): Double =
+      (if (wSum == null) sum.toDouble else wSum.doubleValue) / scale
+
+    /** The largest fall below the running peak, back to double. */
+    def maxFall(scale: Double): Double =
+      (if (wSum == null) fall.toDouble else wFall.doubleValue) / scale
   }
 
   /** An exact unit sum back to double — one division at the end. */

@@ -12,26 +12,28 @@ import scala.collection.mutable.ArrayBuffer
   *
   * One kernel, [[walk]], runs the [[graft.core.TradeBook]] state machine
   * over a symbol-sorted partition: one book per symbol run, one row per
-  * bar ("tl") plus one row per closed or still-open trade ("bl"). Plan
-  * shape (SURVEY.md §4): canonical bars → `repartition($"symbol")` →
+  * bar ("tl"), one row per closed or still-open trade ("bl") and, at the
+  * end of each symbol run of an unsliced walk, one summary row ("sm").
+  * Plan shape (SURVEY.md §4): canonical bars → `repartition($"symbol")` →
   * `sortWithinPartitions(symbol, ts, event_id)` → `mapPartitions(walk)`.
   * ONE shuffle total; parallelism = #symbols spread by hash; per-task
   * state is O(open positions) — closed trades are drained every bar and
   * rows stream through an iterator — so a skewed mega-symbol is
   * wall-clock-bound but never OOMs. Three callers share the kernel:
-  *  - [[timeline]] and [[blotter]]: lazy `kind` projections of one walk;
-  *  - [[combinedRun]]: one walk materialized once, both projections
-  *    read from the stored blocks;
+  *  - [[timeline]], [[blotter]], [[pnlSummary]], [[maxDrawdown]] and
+  *    [[sharpeRatio]]: lazy `kind` projections of one walk;
+  *  - [[combinedRun]]: one walk materialized once, the timeline, blotter
+  *    and summary read from the stored blocks;
   *  - [[runSliced]]: one walk per time slice, book state carried between
-  *    slices as rows of the same output type.
+  *    slices as rows of the same output type ("st"); a slice sees part of
+  *    a symbol, so sliced walks emit no summary.
   *
   * Numeric discipline: per-bar mtm is pure double arithmetic (replicated
   * bit-for-bit by the DuckDB oracle); every cumulative/aggregated series
   * (pnl_ratio, drawdown, pnl, sharpe's sum) quantizes to exact 1e-9
-  * units and sums in an overflow-safe decimal accumulator (see
-  * [[ExactNum]]), so results are exact, independent of partitioning/
-  * aggregation order, AND engine-agnostic — the properties that keep
-  * 100 TB runs reproducible.
+  * units and sums in an overflow-safe accumulator (see [[ExactNum]]), so
+  * results are exact, independent of partitioning/aggregation order, AND
+  * engine-agnostic — the properties that keep 100 TB runs reproducible.
   */
 object MtmEngine {
 
@@ -44,7 +46,18 @@ object MtmEngine {
 
   /** The kernel's output row, discriminated by `kind`: "tl" timeline
     * point, "bl" blotter record, "st" carried book state (sliced runs
-    * only — same columns as an [[EngineBar]], see [[walk]]).
+    * only — same columns as an [[EngineBar]], see [[walk]]) and "sm" a
+    * symbol run's summary (unsliced runs only), which reuses columns
+    * rather than widening every row:
+    *
+    * | summary column     | "sm" column   |
+    * |--------------------|---------------|
+    * | `pnl`              | `mtm_ratio`   |
+    * | `n_trades`         | `event_id`    |
+    * | `win_rate`         | `exit_price`  |
+    * | `avg_holding_secs` | `pnl_norm`    |
+    * | `max_drawdown`     | `close`       |
+    * | `sharpe_ratio`     | `entry_price` |
     */
   private[graft] final case class EngineOut(
       kind: String,
@@ -104,13 +117,81 @@ object MtmEngine {
       .as[EngineBar]
   }
 
+  /** One symbol run's summary, folded bar by bar in walk order — the
+    * reference's ordered folds over the per-bar mtm series
+    * (trade_reward.py:413-450):
+    *  - pnl = Σ mtm, and max drawdown = the largest fall of cum(mtm)
+    *    below its running peak floored at 0 (runner_mtm.py:144,168-172),
+    *    both in exact 1e-9 units;
+    *  - closed-trade count, wins (pnl_norm > 0), mean holding seconds;
+    *  - Sharpe: ms-resolution period (floor to ms, so pre-1970 bars land
+    *    where the oracle's epoch_ms puts them), slippage 1e-6 with its
+    *    sum in exact units, population σ by Spark's `CentralMomentAgg`
+    *    update (the oracle's own stddev_pop noise, ~1e-13 relative, is
+    *    absorbed by the 4-dp output), √(365·24) annualization, −1e50
+    *    when σ = 0. A zero span gives the IEEE x/0 result (±inf by the
+    *    sign of the sum, NaN at 0/0); the 4-dp rounding is
+    *    floor(x·1e4 + 0.5)/1e4 on finite results only.
+    */
+  private final class SummaryFold {
+    private val pnl = new ExactNum.RunningSum
+    private val sumX = new ExactNum.RunningSum
+    private var n, avg, m2 = 0.0
+    private var firstMs, lastMs = 0L
+    private var trades, wins, heldUs = 0L
+
+    def bar(tsUs: Long, mtm: Double): Unit = {
+      pnl.add(ExactNum.unitsOf(mtm, 1e9))
+      val x = mtm - 0.000001
+      sumX.add(ExactNum.unitsOf(x, 1e9))
+      val newN = n + 1.0
+      val delta = x - avg
+      val deltaN = delta / newN
+      avg = avg + deltaN
+      m2 = m2 + delta * (delta - deltaN)
+      lastMs = Math.floorDiv(tsUs, 1000L)
+      if (n == 0.0) firstMs = lastMs
+      n = newN
+    }
+
+    /** A closed blotter row. */
+    def closed(t: EngineOut): Unit = {
+      trades += 1
+      if (t.pnl_norm.get > 0.0) wins += 1
+      heldUs = Math.addExact(heldUs, Math.subtractExact(t.exit_ts_us.get, t.entry_ts_us))
+    }
+
+    private def sharpe: Double = {
+      val sigma = math.sqrt(m2 / n)
+      if (sigma == 0.0) -1e50
+      else {
+        val sum = sumX.total(1e9)
+        val spanMs = (lastMs - firstMs).toDouble
+        val raw =
+          if (spanMs != 0.0) sum / (spanMs / 1000.0 / 3600.0) / sigma * math.sqrt(8760.0)
+          else if (sum > 0.0) Double.PositiveInfinity
+          else if (sum < 0.0) Double.NegativeInfinity
+          else Double.NaN
+        if (math.abs(raw) < 1e14) math.floor(raw * 1e4 + 0.5).toLong.toDouble / 1e4 else raw
+      }
+    }
+
+    def row(symbol: Long): EngineOut = {
+      def perTrade(x: Double) = if (trades == 0) None else Some(x / trades.toDouble)
+      EngineOut("sm", symbol, event_id = trades, close = pnl.maxFall(1e9),
+        mtm_ratio = pnl.total(1e9), entry_price = sharpe,
+        exit_price = perTrade(wins.toDouble), pnl_norm = perTrade(heldUs.toDouble).map(_ / 1000000.0))
+    }
+  }
+
   /** The engine kernel: one pass over a symbol-sorted partition, a fresh
     * [[TradeBook]] per symbol run, price_diff derived from the previous
     * bar in-stream (the partition is already symbol-ordered, so no
     * window is needed). Emits one "tl" row per bar, a "bl" row per trade
     * closed on that bar, and at each run end either the still-open
-    * positions as OPEN "bl" rows or, with `carryOut`, the book as "st"
-    * rows for the next slice.
+    * positions as OPEN "bl" rows followed, on an unsliced walk (no
+    * `carryIn`), by the run's "sm" summary row, or, with `carryOut`, the
+    * book as "st" rows for the next slice.
     *
     * Carried state is one "st" row holding the previous close
     * (buy = sell = 0, close = previous close) plus one per open position
@@ -123,6 +204,7 @@ object MtmEngine {
   private def walk(cfg: PnlConfig, carryIn: Boolean, carryOut: Boolean)(
       bars: Iterator[EngineBar]): Iterator[EngineOut] = {
     var book: TradeBook = null
+    var fold: SummaryFold = null
     var symbol = 0L
     var prevClose = Double.NaN
     val carried = new ArrayBuffer[EngineBar]
@@ -155,7 +237,7 @@ object MtmEngine {
       if (book == null) Nil
       else {
         restore() // a run of carried state alone still ends its book
-        if (!carryOut) book.flushOpen().map(tradeRow)
+        if (!carryOut) book.flushOpen().map(tradeRow) ++ Option(fold).map(_.row(symbol))
         else {
           def rows(side: Seq[OpenPos]) = side.zipWithIndex.map { case (p, i) =>
             EngineOut("st", symbol, CarriedTs, p.entryUs, p.entryPrice,
@@ -171,6 +253,7 @@ object MtmEngine {
         if (book == null || b.symbol != symbol) {
           val out = endRun()
           book = new TradeBook(cfg); symbol = b.symbol; prevClose = Double.NaN
+          if (!carryIn) fold = new SummaryFold
           out
         } else Nil
       if (carryIn && b.ts_us == CarriedTs) {
@@ -182,14 +265,18 @@ object MtmEngine {
         prevClose = b.close
         val mtm = book.step(b.ts_us, b.close, diff, b.buy == 1, b.sell == 1)
         val closed = book.drainTrades().map(tradeRow)
+        if (fold != null) {
+          fold.bar(b.ts_us, mtm)
+          closed.foreach(fold.closed)
+        }
         ended.iterator ++
           Iterator.single(EngineOut("tl", b.symbol, b.ts_us, b.event_id, b.close,
             b.buy, b.sell, mtm)) ++
           closed.iterator
       }
     }
-    // Iterator.++ takes its suffix BY NAME: the last run's flush or state
-    // is built only after perBar exhausts the partition
+    // Iterator.++ takes its suffix BY NAME: the last run's flush, summary
+    // or state is built only after perBar exhausts the partition
     perBar ++ endRun().iterator
   }
 
@@ -212,6 +299,17 @@ object MtmEngine {
       .select("symbol", "direction", "entry_ts_us", "entry_price",
         "exit_ts_us", "exit_price", "pnl_norm", "close_reason", "is_closed")
 
+  /** Per-symbol summary rows of an unsliced kernel output: the "sm"
+    * column mapping of [[EngineOut]] undone. Columns in `MtmRunner`'s
+    * summary order: symbol, pnl, n_trades, win_rate, avg_holding_secs,
+    * max_drawdown, sharpe_ratio.
+    */
+  private def summaryOf(out: DataFrame): DataFrame =
+    out.filter(col("kind") === "sm").select(
+      col("symbol"), col("mtm_ratio").as("pnl"), col("event_id").as("n_trades"),
+      col("exit_price").as("win_rate"), col("pnl_norm").as("avg_holding_secs"),
+      col("close").as("max_drawdown"), col("entry_price").as("sharpe_ratio"))
+
   /** Per-bar mtm timeline: (symbol, ts_us, event_id, close, buy, sell,
     * mtm_ratio) — the reference's `mtm_history` (trade_reward.py:109,166),
     * one row per input bar.
@@ -226,23 +324,19 @@ object MtmEngine {
   def blotter(bars: DataFrame, cfg: PnlConfig, colocated: Boolean = false): DataFrame =
     blotterOf(run(sortedBars(bars, colocated), cfg))
 
-  /** BOTH output families from ONE engine pass: one shuffle, one sort,
-    * one state-machine walk, materialized once; the returned frames are
-    * kind-filtered projections over the stored blocks. Consumers that
-    * need timeline AND blotter (pnlSummary, MtmRunner.calculate) would
-    * otherwise pay the repartition+sort+walk twice — exchange reuse
-    * shares the shuffle write between the twin plans but re-runs the
-    * sort and the per-bar state machine per family.
+  /** Timeline, blotter and summary from ONE engine pass: one shuffle,
+    * one sort, one state-machine walk, materialized once; the returned
+    * frames are kind-filtered projections over the stored blocks, so
+    * each costs one job with no exchange.
     */
-  private[graft] def combinedRun(
-      bars: DataFrame, cfg: PnlConfig, colocated: Boolean = false): (DataFrame, DataFrame) = {
-    // EAGER: pnlSummary consumes both returned frames in one job, whose
-    // timeline and blotter aggregate stages are independent; a lazy
-    // checkpoint lets them race the block store, and each loser re-runs
-    // the whole walk. Single-frame callers pay the same one job, at
-    // construction.
+  private[graft] def combinedRun(bars: DataFrame, cfg: PnlConfig,
+      colocated: Boolean = false): (DataFrame, DataFrame, DataFrame) = {
+    // EAGER: MtmResult.queryDict reads all three frames in one job, whose
+    // scan stages are independent; a lazy checkpoint lets them race the
+    // block store, and each loser re-runs the whole walk. Single-frame
+    // callers pay the same one job, at construction.
     val out = run(sortedBars(bars, colocated), cfg).localCheckpoint(eager = true)
-    (timelineOf(out), blotterOf(out))
+    (timelineOf(out), blotterOf(out), summaryOf(out))
   }
 
   // ---- time-sliced execution (mega-symbol skew hardening, SURVEY §4) ----
@@ -294,6 +388,12 @@ object MtmEngine {
     * slices follow day/batch boundaries known up front.
     */
   def runSliced(bars: DataFrame, cfg: PnlConfig, cutsUs: Seq[Long]): (DataFrame, DataFrame) = {
+    val parts = slicedWalks(bars, cfg, cutsUs)
+    (parts.map(timelineOf).reduce(_.unionAll(_)), parts.map(blotterOf).reduce(_.unionAll(_)))
+  }
+
+  /** The per-slice kernel outputs behind [[runSliced]], in slice order. */
+  private[graft] def slicedWalks(bars: DataFrame, cfg: PnlConfig, cutsUs: Seq[Long]): Seq[DataFrame] = {
     // out-of-order or duplicate cuts would make slice ranges overlap —
     // rows in the overlap run through TWO slices and silently duplicate
     require(
@@ -308,7 +408,7 @@ object MtmEngine {
         .otherwise(col("ts_us")))
     val cuts = cutsUs.toArray
     var carried = spark.emptyDataset[EngineBar].toDF()
-    val parts = (0 to cuts.length).map { i =>
+    (0 to cuts.length).map { i =>
       val lo = if (i == 0) None else Some(cuts(i - 1))
       val hi = if (i == cuts.length) None else Some(cuts(i))
       val sliceBars = typed
@@ -330,29 +430,13 @@ object MtmEngine {
         .select("symbol", "ts_us", "event_id", "close", "buy", "sell")
       out
     }
-    (parts.map(timelineOf).reduce(_.unionAll(_)), parts.map(blotterOf).reduce(_.unionAll(_)))
   }
 
   // ---- query-surface wrappers (timestamps restored to TIMESTAMP μs) ----
 
-  /** Ordered per-symbol bar window over the engine timeline. */
-  private def seqWindow =
-    Window.partitionBy("symbol").orderBy("ts_us", "event_id")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-
-  /** Cumulative exact 1e-9-unit sum — see [[ExactNum]] for why
-    * quantize-then-sum (engine-agnostic IEEE rounding, overflow-safe
-    * decimal accumulator) replaces double→DECIMAL casts.
-    */
-  private def cumUnits(c: org.apache.spark.sql.Column) =
-    sum(ExactNum.units(c, 1e9)).over(seqWindow)
-
-  // Each query surface comes in two forms: the public (bars, cfg) entry
-  // and a `*From(timeline/blotter)` form over a precomputed engine
-  // output — MtmRunner.calculate materializes the engine ONCE and feeds
-  // every summary from it instead of re-running the state machine per
-  // metric (exchange reuse shares only the shuffle write, not the
-  // sort + mapPartitions work).
+  // The timeline and blotter query surfaces come in two forms: the
+  // public (bars, cfg) entry and a `*From` form over a precomputed
+  // engine output (MtmRunner.calculate's checkpoint, runSliced).
 
   /** SURVEY #4/#5: per-bar mtm_ratio + cumulative pnl_ratio
     * (reference pnl_timeline: runner_mtm.py:136-183).
@@ -360,11 +444,17 @@ object MtmEngine {
   def timelineQuery(bars: DataFrame, cfg: PnlConfig, colocated: Boolean = false): DataFrame =
     timelineQueryFrom(timeline(bars, cfg, colocated))
 
-  private[graft] def timelineQueryFrom(tl: DataFrame): DataFrame =
-    tl.withColumn("pnl_ratio", ExactNum.toDouble(cumUnits(col("mtm_ratio")), 1e9))
+  private[graft] def timelineQueryFrom(tl: DataFrame): DataFrame = {
+    // cumulative exact 1e-9-unit sum (see ExactNum for why quantize-then-
+    // sum replaces double→DECIMAL casts) over each symbol's bar order
+    val seq = Window.partitionBy("symbol").orderBy("ts_us", "event_id")
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    tl.withColumn("pnl_ratio",
+        ExactNum.toDouble(sum(ExactNum.units(col("mtm_ratio"), 1e9)).over(seq), 1e9))
       .select(
         col("symbol"), timestamp_micros(col("ts_us")).as("ts"), col("event_id"),
         col("close"), col("buy"), col("sell"), col("mtm_ratio"), col("pnl_ratio"))
+  }
 
   /** SURVEY #2/#3: the trade blotter as a query. */
   def blotterQuery(bars: DataFrame, cfg: PnlConfig, colocated: Boolean = false): DataFrame =
@@ -388,104 +478,27 @@ object MtmEngine {
       col("pnl_norm"), (col("pnl_norm") * col("entry_price")).as("pnl"),
       col("close_reason"), col("is_closed"))
 
+  /** Summary frame of one lazy walk (see [[SummaryFold]]). */
+  private def summary(bars: DataFrame, cfg: PnlConfig): DataFrame =
+    summaryOf(run(sortedBars(bars), cfg))
+
   /** SURVEY #6: per-symbol max drawdown — running peak of cum-pnl floored
     * at 0, minus current, maxed (reference runner_mtm.py:144,168-172).
-    * All-decimal arithmetic end to end, one double conversion at the end.
     */
   def maxDrawdown(bars: DataFrame, cfg: PnlConfig): DataFrame =
-    maxDrawdownFrom(timeline(bars, cfg))
-
-  private[graft] def maxDrawdownFrom(tl: DataFrame): DataFrame =
-    tl
-      // all-integer unit arithmetic end to end (exact in Spark's decimal
-      // and DuckDB's hugeint alike) — one double division at the very end
-      .withColumn("cum", cumUnits(col("mtm_ratio")))
-      .withColumn("runmax", max(col("cum")).over(seqWindow))
-      .groupBy("symbol")
-      .agg(
-        ExactNum.toDouble(
-          max(greatest(col("runmax"), lit(0).cast("decimal(38,0)")) - col("cum")), 1e9)
-          .as("max_drawdown"))
+    summary(bars, cfg).select("symbol", "max_drawdown")
 
   /** SURVEY #7: per-symbol Sharpe, reference formula
-    * (trade_reward.py:423-450): ms-resolution period, slippage 1e-6,
-    * population std, √(365·24) annualization, −1e50 when σ=0. The sum
-    * quantizes to 1e-9 units (engine-agnostic, see cumUnits; error
-    * ≪ the 4-dp output resolution) and the final 4-dp rounding is
-    * floor(x·1e4 + 0.5)/1e4 — `round()` would reintroduce the
-    * engine-specific tie semantics the unit scheme exists to avoid. σ
-    * uses each engine's stddev_pop; its ~1e-13 relative noise is
-    * absorbed by the 4-dp output.
+    * (trade_reward.py:423-450), 4-dp.
     */
   def sharpeRatio(bars: DataFrame, cfg: PnlConfig): DataFrame =
-    sharpeRatioFrom(timeline(bars, cfg))
-
-  private[graft] def sharpeRatioFrom(tl: DataFrame): DataFrame = {
-    val xs = col("mtm_ratio") - lit(0.000001)
-    // span_ms = 0 (every bar of a symbol inside ONE millisecond, with
-    // price movement so σ > 0) must yield the IEEE result DuckDB's
-    // double division produces — ±inf by the sign of sum_x, NaN at
-    // 0/0 — NOT evaluate the raw division: under ANSI mode (the
-    // Spark 4 default) x/0.0 ERRORS the job. count() masked this
-    // (column pruning skips the projection); materializing the column
-    // crashed — found by the degenerate-bar probe, pinned in
-    // MtmEngineSpec. σ > 0 here (the σ = 0 guard below fires first),
-    // so dividing by it never flips the sign.
-    val raw = when(col("span_ms") =!= 0.0,
-        col("sum_x") / (col("span_ms") / lit(1000.0) / lit(3600.0)) /
-          col("sigma") * lit(math.sqrt(8760.0)))
-      .when(col("sum_x") > 0.0, lit(Double.PositiveInfinity))
-      .when(col("sum_x") < 0.0, lit(Double.NegativeInfinity))
-      .otherwise(lit(Double.NaN))
-    // FLOOR division to ms (not bare `div`, which truncates toward zero):
-    // the DuckDB oracle's epoch_ms floors, so a pre-1970 bar not on a ms
-    // boundary would land 1 ms apart — same hazard Tables.events corrects
-    tl.withColumn("ms", expr("ts_us div 1000 - (CASE WHEN ts_us % 1000 < 0 THEN 1 ELSE 0 END)"))
-      .groupBy("symbol")
-      .agg(
-        ExactNum.sumExact(xs, 1e9).as("sum_x"),
-        (max(col("ms")) - min(col("ms"))).cast("double").as("span_ms"),
-        stddev_pop(xs).as("sigma"))
-      .select(
-        col("symbol"),
-        when(col("sigma").isNull || col("sigma") === 0.0, lit(-1e50))
-          // finite guard: a single-ms symbol gives span 0 → raw ±inf/NaN,
-          // which Spark's floor(double)→LONG would mangle (Long.MaxValue /
-          // 0) while DuckDB's floor keeps them — pass non-finite through
-          // unrounded on both sides (abs(NaN) < k is false in both)
-          .when(abs(raw) < lit(1e14),
-            floor(raw * lit(1e4) + lit(0.5)).cast("double") / lit(1e4))
-          .otherwise(raw)
-          .as("sharpe_ratio"))
-  }
+    summary(bars, cfg).select("symbol", "sharpe_ratio")
 
   /** SURVEY #8: per-symbol summary — total pnl (Σ mtm,
-    * trade_reward.py:413-421), closed-trade count, win rate, average
-    * holding seconds (reference Mtm_Result surface).
+    * trade_reward.py:413-421), closed-trade count, win rate and average
+    * holding seconds (null without closed trades), the reference
+    * Mtm_Result surface.
     */
-  def pnlSummary(bars: DataFrame, cfg: PnlConfig): DataFrame = {
-    // one engine pass for both families (was: independent timeline +
-    // blotter runs — double shuffle/sort/state-machine work)
-    val (tl, bl) = combinedRun(bars, cfg)
-    pnlSummaryFrom(tl, bl)
-  }
-
-  private[graft] def pnlSummaryFrom(tl: DataFrame, bl: DataFrame): DataFrame = {
-    val pnlAgg = tl
-      .groupBy("symbol")
-      .agg(ExactNum.sumExact(col("mtm_ratio"), 1e9).as("pnl"))
-    val tradeAgg = bl
-      .filter(col("is_closed"))
-      .groupBy("symbol")
-      .agg(
-        count(lit(1)).as("n_trades"),
-        count(when(col("pnl_norm") > 0.0, 1)).as("n_wins"),
-        sum(col("exit_ts_us") - col("entry_ts_us")).as("hold_us"))
-    pnlAgg.join(tradeAgg, Seq("symbol"), "left").select(
-      col("symbol"), col("pnl"),
-      coalesce(col("n_trades"), lit(0L)).as("n_trades"),
-      (col("n_wins").cast("double") / col("n_trades").cast("double")).as("win_rate"),
-      (col("hold_us").cast("double") / col("n_trades").cast("double") / lit(1000000.0))
-        .as("avg_holding_secs"))
-  }
+  def pnlSummary(bars: DataFrame, cfg: PnlConfig): DataFrame =
+    summary(bars, cfg).select("symbol", "pnl", "n_trades", "win_rate", "avg_holding_secs")
 }

@@ -91,14 +91,10 @@ object MtmRunner {
       cfg: PnlConfig = PnlConfig.default,
       meta: RunMeta = RunMeta()): MtmResult = {
     val runStart = System.currentTimeMillis() / 1000L
-    // ONE engine pass for both families (combinedRun materializes the
-    // unified output): every summary metric is an agg/window over the
-    // stored blocks — without this, each of pnl/drawdown/sharpe would
-    // re-execute the repartition+sort+mapPartitions pipeline
-    val (tl, bl) = MtmEngine.combinedRun(bars, cfg)
-    val summary = MtmEngine.pnlSummaryFrom(tl, bl)
-      .join(MtmEngine.maxDrawdownFrom(tl), Seq("symbol"), "left")
-      .join(MtmEngine.sharpeRatioFrom(tl), Seq("symbol"), "left")
+    // one engine walk, checkpointed at construction: the timeline,
+    // trades and per-symbol summary (folded in the walk) are projections
+    // of the stored blocks
+    val (tl, bl, summary) = MtmEngine.combinedRun(bars, cfg)
     MtmResult(
       summary = summary,
       timeline = MtmEngine.timelineQueryFrom(tl),

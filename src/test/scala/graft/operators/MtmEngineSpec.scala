@@ -2,7 +2,11 @@ package graft.operators
 
 import graft.{Sessions, Tables}
 import graft.core.{InventoryMode, PnlConfig, RefSim}
+import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -290,5 +294,228 @@ class MtmEngineSpec extends AnyFunSuite {
       .toDF("symbol", "ts_us", "event_id", "close", "buy", "sell")
     val e = intercept[Exception](MtmEngine.runSliced(bars, everyPathCfg, Seq(3L))._1.collect())
     assert(e.getMessage.contains("reserved for carried state"), e.getMessage)
+  }
+
+  // ---- the summary, folded in the walk, against window/aggregate formulas ----
+
+  /** The per-symbol summary as window, aggregate and join formulas over
+    * the engine's timeline and blotter — how the engine computed it before
+    * the walk folded it. The fold must equal these bit for bit.
+    */
+  private def refSummary(tl: DataFrame, bl: DataFrame): DataFrame = {
+    val seqWindow = Window.partitionBy("symbol").orderBy("ts_us", "event_id")
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val pnl = tl.groupBy("symbol")
+      .agg(ExactNum.sumExact(col("mtm_ratio"), 1e9).as("pnl"))
+    val tradeAgg = bl.filter(col("is_closed")).groupBy("symbol").agg(
+      count(lit(1)).as("n_trades"),
+      count(when(col("pnl_norm") > 0.0, 1)).as("n_wins"),
+      sum(col("exit_ts_us") - col("entry_ts_us")).as("hold_us"))
+    val pnlSummary = pnl.join(tradeAgg, Seq("symbol"), "left").select(
+      col("symbol"), col("pnl"),
+      coalesce(col("n_trades"), lit(0L)).as("n_trades"),
+      (col("n_wins").cast("double") / col("n_trades").cast("double")).as("win_rate"),
+      (col("hold_us").cast("double") / col("n_trades").cast("double") / lit(1000000.0))
+        .as("avg_holding_secs"))
+    val drawdown = tl
+      .withColumn("cum", sum(ExactNum.units(col("mtm_ratio"), 1e9)).over(seqWindow))
+      .withColumn("runmax", max(col("cum")).over(seqWindow))
+      .groupBy("symbol")
+      .agg(ExactNum.toDouble(
+        max(greatest(col("runmax"), lit(0).cast("decimal(38,0)")) - col("cum")), 1e9)
+        .as("max_drawdown"))
+    val xs = col("mtm_ratio") - lit(0.000001)
+    val raw = when(col("span_ms") =!= 0.0,
+        col("sum_x") / (col("span_ms") / lit(1000.0) / lit(3600.0)) /
+          col("sigma") * lit(math.sqrt(8760.0)))
+      .when(col("sum_x") > 0.0, lit(Double.PositiveInfinity))
+      .when(col("sum_x") < 0.0, lit(Double.NegativeInfinity))
+      .otherwise(lit(Double.NaN))
+    val sharpe = tl
+      .withColumn("ms", expr("ts_us div 1000 - (CASE WHEN ts_us % 1000 < 0 THEN 1 ELSE 0 END)"))
+      .groupBy("symbol")
+      .agg(
+        ExactNum.sumExact(xs, 1e9).as("sum_x"),
+        (max(col("ms")) - min(col("ms"))).cast("double").as("span_ms"),
+        stddev_pop(xs).as("sigma"))
+      .select(
+        col("symbol"),
+        when(col("sigma").isNull || col("sigma") === 0.0, lit(-1e50))
+          .when(abs(raw) < lit(1e14),
+            floor(raw * lit(1e4) + lit(0.5)).cast("double") / lit(1e4))
+          .otherwise(raw)
+          .as("sharpe_ratio"))
+    pnlSummary
+      .join(drawdown, Seq("symbol"), "left")
+      .join(sharpe, Seq("symbol"), "left")
+  }
+
+  /** Eight trial configurations shaped like a hyper-parameter sweep's. */
+  private val sweepCfgs: Seq[PnlConfig] = {
+    val r = new scala.util.Random(23)
+    val modes = Seq(InventoryMode.Fifo, InventoryMode.Lifo, InventoryMode.WorstPrice)
+    (0 until 8).map { i =>
+      val roi0 = 0.02 + r.nextInt(80) / 1000.0
+      PnlConfig(
+        roi = Map(0 -> roi0, (10 + r.nextInt(60)) -> roi0 / 2, (120 + r.nextInt(240)) -> roi0 / 5),
+        stoploss = -(0.01 + r.nextInt(90) / 1000.0),
+        enableShortPosition = i % 2 == 0,
+        maxPositionPerSymbol = 1 + i % 3,
+        feeRate = r.nextInt(4) / 1000.0,
+        laidBackTax = r.nextInt(3) / 10000.0,
+        inventoryMode = modes(i % 3))
+    }
+  }
+
+  private def barsOf(rows: Seq[(Long, Long, Long, Double, Int, Int)]): DataFrame = {
+    import spark.implicits._
+    rows.toDF("symbol", "ts_us", "event_id", "close", "buy", "sell")
+  }
+
+  /** σ = 0, a zero span (±inf and 0/0), no closed trades. */
+  private lazy val degenerateBars = barsOf(Seq(
+    (10L, 1000L * 1000, 1L, 100.0, 1, 0), (10L, 2000L * 1000, 2L, 100.0, 0, 0),
+    (10L, 3000L * 1000, 3L, 100.0, 0, 0), // constant price: σ = 0
+    (20L, 5000L * 1000, 4L, 50.0, 1, 0), // single bar: σ = 0
+    (30L, 6000L * 1000, 5L, 10.0, 1, 0), // three bars inside one ms,
+    (30L, 6000L * 1000 + 300, 6L, 20.0, 0, 0), // rising: +inf
+    (30L, 6000L * 1000 + 600, 7L, 40.0, 0, 0),
+    (40L, 7000L * 1000, 8L, 5.0, 0, 0), (40L, 8000L * 1000, 9L, 6.0, 0, 0), // no signals
+    (50L, 9000L * 1000, 10L, 40.0, 1, 0), // falling inside one ms: -inf
+    (50L, 9000L * 1000 + 300, 11L, 20.0, 0, 0),
+    (50L, 9000L * 1000 + 600, 12L, 10.0, 0, 0),
+    // inside one ms, unit sum of (mtm − 1e-6) exactly 0 with σ > 0: NaN
+    // (units −1000, +999000, −998000)
+    (60L, 4000L * 1000, 13L, 1.0, 1, 0),
+    (60L, 4000L * 1000 + 300, 14L, 1.001, 0, 0),
+    (60L, 4000L * 1000 + 600, 15L, 1.000003, 0, 0),
+    (70L, 1000L * 1000, 16L, 10.0, 1, 0), (70L, 2000L * 1000, 17L, 12.0, 0, 1),
+    (70L, 3000L * 1000, 18L, 9.0, 1, 0), (70L, 4000L * 1000, 19L, 8.0, 0, 1)))
+
+  /** Bars before 1970 off ms boundaries: the span's ms must floor (−2001
+    * ms here, where truncation gives −2000).
+    */
+  private lazy val pre1970Bars = barsOf(Seq(
+    (1L, -2000500L, 1L, 10.0, 1, 0), (1L, -1500250L, 2L, 12.0, 0, 0),
+    (1L, -700100L, 3L, 11.0, 0, 0), (1L, 700L, 4L, 13.0, 0, 1),
+    (2L, -90001L, 5L, 5.0, 0, 1), (2L, -1L, 6L, 4.0, 0, 0), (2L, 999L, 7L, 4.5, 1, 0)))
+
+  /** Per-bar mtm near ±5e9, so cumulative units pass ±2^63 (a long-only
+    * rise on symbol 1, a short squeezed on symbol 2) while every row's
+    * units stay below it.
+    */
+  private lazy val hugeBars = barsOf(Seq(
+    (1L, 1000000L, 1L, 1e-3, 1, 0), (1L, 2000000L, 2L, 5e6, 0, 0),
+    (1L, 3000000L, 3L, 1e7, 0, 0), (1L, 4000000L, 4L, 5e6, 0, 0),
+    (1L, 5000000L, 5L, 1e-3, 0, 0),
+    (2L, 1000000L, 6L, 1e-3, 0, 1), (2L, 2000000L, 7L, 5e6, 0, 0),
+    (2L, 3000000L, 8L, 1e7, 0, 0)))
+
+  /** Every summary surface — calculate's summary and the three lazy
+    * queries — equals the reference bit for bit; returns the reference.
+    */
+  private def assertSummaryMatches(what: String, bars: DataFrame, cfg: PnlConfig): DataFrame = {
+    val ref = refSummary(MtmEngine.timeline(bars, cfg), MtmEngine.blotter(bars, cfg))
+    val expect = bitBag(ref)
+    assert(expect.nonEmpty, what)
+    assert(bitBag(MtmRunner.calculate(bars, cfg).summary) == expect, s"$what: calculate")
+    def part(cs: String*) = bitBag(ref.select(cs.map(col): _*))
+    assert(bitBag(MtmEngine.pnlSummary(bars, cfg)) ==
+      part("symbol", "pnl", "n_trades", "win_rate", "avg_holding_secs"), s"$what: pnlSummary")
+    assert(bitBag(MtmEngine.maxDrawdown(bars, cfg)) == part("symbol", "max_drawdown"),
+      s"$what: maxDrawdown")
+    assert(bitBag(MtmEngine.sharpeRatio(bars, cfg)) == part("symbol", "sharpe_ratio"),
+      s"$what: sharpeRatio")
+    ref
+  }
+
+  test("summary folded in the walk equals the window/aggregate formulas bit for bit") {
+    val bars = MtmEngine.barsFromEvents(Tables.events(spark, sfDir))
+    assertSummaryMatches("everyPathCfg", bars, everyPathCfg)
+    sweepCfgs.zipWithIndex.foreach { case (cfg, i) =>
+      assertSummaryMatches(s"sweep config $i", bars, cfg)
+    }
+  }
+
+  test("summary fold: degenerate bars, pre-1970 bars and unit sums past 2^63") {
+    val ref = assertSummaryMatches("degenerate", degenerateBars, PnlConfig.default)
+      .collect().map(r => r.getLong(0) -> r).toMap
+    def sharpe(sym: Long) = ref(sym).getDouble(ref(sym).fieldIndex("sharpe_ratio"))
+    assert(sharpe(10L) == -1e50 && sharpe(20L) == -1e50)
+    assert(sharpe(30L).isPosInfinity && sharpe(50L).isNegInfinity && sharpe(60L).isNaN)
+    for (sym <- Seq(20L, 40L)) {
+      val r = ref(sym)
+      assert(r.getLong(r.fieldIndex("n_trades")) == 0L)
+      assert(r.isNullAt(r.fieldIndex("win_rate")) && r.isNullAt(r.fieldIndex("avg_holding_secs")))
+    }
+    assert(ref(70L).getLong(ref(70L).fieldIndex("n_trades")) == 2L)
+
+    val pre = assertSummaryMatches("pre-1970", pre1970Bars, everyPathCfg)
+      .collect().map(r => r.getDouble(r.fieldIndex("sharpe_ratio")))
+    assert(pre.forall(x => x != -1e50 && !x.isInfinite && !x.isNaN), pre.toSeq)
+
+    val shorts = PnlConfig(enableShortPosition = true)
+    val huge = assertSummaryMatches("past 2^63", hugeBars, shorts)
+      .collect().map(r => r.getLong(0) -> r).toMap
+    assert(huge(1L).getDouble(huge(1L).fieldIndex("max_drawdown")) > 9.3e9)
+    val cumUnits = MtmEngine.timeline(hugeBars, shorts)
+      .groupBy("symbol").agg(sum(ExactNum.units(col("mtm_ratio"), 1e9)).as("u"))
+      .collect().map(r => r.getLong(0) -> BigInt(r.getDecimal(1).toBigIntegerExact)).toMap
+    val peak1 = MtmEngine.timeline(hugeBars, shorts).filter(col("symbol") === 1L)
+      .orderBy("ts_us").select("mtm_ratio").collect().map(r => ExactNum.unitsOf(r.getDouble(0), 1e9))
+      .scanLeft(BigInt(0))(_ + _).max
+    assert(peak1 > BigInt(Long.MaxValue), s"symbol 1's running sum peaks at $peak1")
+    assert(cumUnits(2L) < BigInt(Long.MinValue), s"symbol 2's unit sum ${cumUnits(2L)}")
+  }
+
+  /** Spark jobs run, and shuffle bytes written, by `body` on this thread. */
+  private def jobCost(body: => Unit): (Int, Long) = {
+    val sc = spark.sparkContext
+    val key = "graft.spec.jobCost"
+    val tag = java.util.UUID.randomUUID().toString
+    val jobs = new AtomicInteger
+    val shuffleBytes = new AtomicLong
+    val stages = ConcurrentHashMap.newKeySet[Int]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty(key) == tag) {
+          jobs.incrementAndGet()
+          e.stageIds.foreach(stages.add)
+        }
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (stages.contains(e.stageId) && e.taskMetrics != null)
+          shuffleBytes.addAndGet(e.taskMetrics.shuffleWriteMetrics.bytesWritten)
+    }
+    sc.addSparkListener(listener)
+    sc.setLocalProperty(key, tag)
+    try body
+    finally {
+      sc.setLocalProperty(key, null)
+      // listener events are delivered asynchronously: drain the bus
+      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+      bus.getClass.getMethod("waitUntilEmpty", java.lang.Long.TYPE).invoke(bus, Long.box(60000L))
+      sc.removeSparkListener(listener)
+    }
+    (jobs.get, shuffleBytes.get)
+  }
+
+  test("calculate's summary costs one job and no shuffle; sliced walks emit no summary") {
+    val bars = MtmEngine.barsFromEvents(Tables.events(spark, sfDir))
+    val res = MtmRunner.calculate(bars, everyPathCfg)
+    var rows = 0
+    val (jobs, shuffleBytes) = jobCost { rows = res.summary.collect().length }
+    assert(rows == bars.select("symbol").distinct().count())
+    assert(jobs == 1, s"summary.collect() ran $jobs jobs")
+    assert(shuffleBytes == 0L, s"summary.collect() wrote $shuffleBytes shuffle bytes")
+
+    val Array(lo, hi) = bars.agg(min(col("ts_us")), max(col("ts_us"))).head()
+      .toSeq.map(_.asInstanceOf[Long]).toArray
+    for (cuts <- Seq(Seq.empty[Long], Seq(lo + (hi - lo) / 3, lo + 2 * (hi - lo) / 3))) {
+      val parts = MtmEngine.slicedWalks(bars, everyPathCfg, cuts)
+      assert(parts.length == cuts.length + 1)
+      parts.zipWithIndex.foreach { case (p, i) =>
+        assert(p.filter(col("kind") === "sm").isEmpty, s"cuts $cuts: slice $i holds summary rows")
+      }
+    }
   }
 }
